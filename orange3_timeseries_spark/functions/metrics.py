@@ -8,15 +8,13 @@ reference's quirks preserved:
   (``:46-49``);
 - all metrics align ``true[-len(pred):]`` with ``pred``.
 
-Provided both as NumPy functions (model tier) and as Spark aggregate
-expression builders (distributed scoring of prediction tables).
+Provided as NumPy functions (model tier); the registered queries score
+prediction tables with their own Spark expressions.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def _align(true, pred):
@@ -73,38 +71,6 @@ def _snap6(a):
     return half_up_exact(a * 1e6) / 1e6
 
 
-# ------------------------------------------------------ Spark agg expressions
-def rmse_expr(true: Column, pred: Column) -> Column:
-    return F.sqrt(F.avg(F.pow(true - pred, 2)))
-
-
-def mae_expr(true: Column, pred: Column) -> Column:
-    """Median absolute error (exact percentile)."""
-    return F.median(F.abs(true - pred))
-
-
-def mape_expr(true: Column, pred: Column) -> Column:
-    return F.avg(F.abs(true - pred)) / F.avg(F.abs(true))
-
-
-def r2_expr(true: Column, pred: Column) -> Column:
-    # algebraic form: 1 - ss_res / (sum(t^2) - n*mean(t)^2)
-    ss_res = F.sum(F.pow(true - pred, 2))
-    n = F.count(true)
-    return 1 - ss_res / (F.sum(F.pow(true, 2)) - n * F.pow(F.avg(true), 2))
-
-
-def pocid_expr(true_diff: Column, pred_diff: Column) -> Column:
-    """POCID over pre-computed consecutive diffs (use ``lag`` upstream).
-
-    Unlike :func:`pocid` this applies NO quantization — callers are
-    expected to pass diffs of already-quantized columns (the registered
-    queries lag 6dp-rounded forecasts), because a sign test on raw
-    floats is engine-divergent when consecutive values differ by ~1 ulp
-    (AR-family forecasts converging to the mean)."""
-    return 100 * F.avg(((true_diff * pred_diff) > 0).cast("double"))
-
-
 def smape(true, pred) -> float:
     """Symmetric MAPE, M4-competition convention: the PERCENTAGE
     ``100 · mean(2|t − p| / (|t| + |p|))`` with zero-denominator terms
@@ -131,13 +97,3 @@ def mase(true, pred, train, m: int = 1) -> float:
     if scale == 0:
         return float("nan")
     return float(np.mean(np.abs(true - pred)) / scale)
-
-
-def smape_expr(true: Column, pred: Column) -> Column:
-    """Symmetric MAPE aggregate expression — same M4 convention as
-    :func:`smape` (percentage, zero-denominator terms count as 0 and
-    stay in the mean), so distributed and local scoring agree."""
-    den = F.abs(true) + F.abs(pred)
-    term = F.when(den > 0, 2 * F.abs(true - pred) / den) \
-        .otherwise(F.lit(0.0))
-    return 100.0 * F.avg(term)

@@ -23,13 +23,13 @@ No Python UDFs anywhere — everything is Catalyst expressions.
 
 from __future__ import annotations
 
-import os
 import weakref
 from typing import NamedTuple, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_timeseries_spark.operators import index_store as _store
 from orange3_timeseries_spark.operators.hashing import phash
 from orange3_timeseries_spark.operators.partitioning import widen_partitions
 from orange3_timeseries_spark.operators.text import tokens_expr
@@ -987,6 +987,38 @@ def lsh_build_index(docs: DataFrame, *, text_col: str = "text",
                     text_col)
 
 
+def _lsh_open(spark, vpath, tables, small) -> LshIndex:
+    p = small["params"][0]
+    return LshIndex(tables["entries"], tables["docs"], int(p.k),
+                    int(p.bands), int(p.n), int(p.n_buckets),
+                    p.hash_family, p.id_col, p.text_col)
+
+
+_LSH = _store._IndexFamily(
+    "lsh",
+    (_store._StateTable("entries", "bucket"),
+     # an id-hash bucket: the probe's VERIFY join prunes the indexed
+     # text to the colliding candidates' buckets
+     _store._StateTable(
+         "docs", "dbucket",
+         part_expr=lambda ix: F.pmod(F.xxhash64(F.col(ix.id_col)),
+                                     F.lit(ix.n_buckets)).cast("int"))),
+    # the banding scheme, so a reader probes with the SAME (k, bands,
+    # n, hash family) the index was built with
+    (_store._SmallTable(
+        "params", "k int, bands int, n int, n_buckets int, "
+        "hash_family string, id_col string, text_col string",
+        lambda ix: [(ix.k, ix.bands, ix.n, ix.n_buckets, ix.hash_family,
+                     ix.id_col, ix.text_col)]),),
+    ("docs", None,
+     "duplicate its band entries and self-pair on every later probe"),
+    lambda base, new: lsh_build_index(
+        new, text_col=base.text_col, id_col=base.id_col, k=base.k,
+        bands=base.bands, n=base.n, n_buckets=base.n_buckets,
+        hash_family=base.hash_family),
+    _lsh_open)
+
+
 def write_lsh_index(index: LshIndex, path: str) -> None:
     """Persist the index as three parquet state tables (overwrite):
     ``entries`` partitioned by ``bucket`` (probe-time bucket filters
@@ -1002,38 +1034,7 @@ def write_lsh_index(index: LshIndex, path: str) -> None:
     (operators/index_store.py) — read→merge→write on the same logical
     path is supported, and a crash mid-write leaves readers on the
     last complete generation."""
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-        run_concurrent,
-        write_small_table,
-    )
-
-    root = path
-    path = begin_version(root)
-    # entries/docs are appendable: base data under <table>/delta=0
-    # (the journaled layout — appends become partition dirs of the
-    # SAME scan).  The two writes are independent — overlap them
-    # (guide §2.6)
-    dbucket = F.pmod(F.xxhash64(F.col(index.id_col)),
-                     F.lit(index.n_buckets)).cast("int")
-    run_concurrent(
-        lambda: (index.entries.repartition("bucket")
-                 .write.mode("overwrite").partitionBy("bucket")
-                 .parquet(base_table_path(path, "entries"))),
-        lambda: (index.docs.withColumn("dbucket", dbucket)
-                 .repartition("dbucket")
-                 .write.mode("overwrite").partitionBy("dbucket")
-                 .parquet(base_table_path(path, "docs"))))
-    spark = index.entries.sparkSession
-    write_small_table(
-        spark, os.path.join(path, "params"),
-        [(index.k, index.bands, index.n, index.n_buckets,
-          index.hash_family, index.id_col, index.text_col)],
-        "k int, bands int, n int, n_buckets int, hash_family string,"
-        " id_col string, text_col string")
-    commit_version(root, path)
+    _store._write_index(_LSH, index, path)
 
 
 def read_lsh_index(spark, path: str) -> LshIndex:
@@ -1041,23 +1042,7 @@ def read_lsh_index(spark, path: str) -> LshIndex:
     eagerly; entries/docs stay lazy until a probe runs.  ``path`` is
     the logical root — the ``_CURRENT`` generation pointer resolves
     first (operators/index_store.py), bare layout fallback."""
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    from orange3_timeseries_spark.operators.index_store import (
-        read_small_table_row,
-    )
-    p = read_small_table_row(spark, os.path.join(path, "params"))
-    # entries/docs union COMMITTED journaled append deltas — a torn
-    # append is invisible (index_store.read_index_table)
-    return LshIndex(
-        read_index_table(spark, path, "entries"),
-        read_index_table(spark, path, "docs"),
-        int(p.k), int(p.bands), int(p.n), int(p.n_buckets),
-        p.hash_family, p.id_col, p.text_col)
+    return _store._read_index(_LSH, spark, path)
 
 
 def lsh_probe_index(index: LshIndex, new_docs: DataFrame, *,
@@ -1146,30 +1131,7 @@ def lsh_merge_index(base: LshIndex, new_docs: DataFrame, *,
     semi-join of the new ids into the indexed docs (one early-exit
     scan at merge time, the same fail-loud rule as
     ``bm25_merge_index``)."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col, text_col = base.id_col, base.text_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.docs, new_docs, id_col, "lsh_merge_index",
-            "duplicate its band entries and self-pair on every later "
-            "probe")
-    delta = lsh_build_index(new_docs, text_col=text_col, id_col=id_col,
-                            k=base.k, bands=base.bands, n=base.n,
-                            n_buckets=base.n_buckets,
-                            hash_family=base.hash_family)
-    return LshIndex(
-        base.entries.select(id_col, "band", "band_key", "bucket")
-        .unionByName(delta.entries.select(id_col, "band", "band_key",
-                                          "bucket")),
-        # explicit projection: docs READ from a persisted index carry
-        # the dbucket partition column, fresh deltas do not
-        base.docs.select(id_col, text_col)
-        .unionByName(delta.docs.select(id_col, text_col)),
-        base.k, base.bands, base.n, base.n_buckets, base.hash_family,
-        id_col, text_col)
+    return _store._merge_index(_LSH, base, new_docs, check_disjoint)
 
 
 def lsh_append_index(spark, path: str, new_docs: DataFrame, *,
@@ -1188,54 +1150,7 @@ def lsh_append_index(spark, path: str, new_docs: DataFrame, *,
     until ``compact_lsh_index`` resets it.  The expected cadence of a
     dedup-at-ingest service: probe → append survivors → compact on a
     schedule."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path),
-                             ("entries", "docs"))
-    base = read_lsh_index(spark, path)
-    id_col, text_col = base.id_col, base.text_col
-    delta = lsh_build_index(new_docs, text_col=text_col, id_col=id_col,
-                            k=base.k, bands=base.bands, n=base.n,
-                            n_buckets=base.n_buckets,
-                            hash_family=base.hash_family)
-    dpath = begin_delta(path)
-    dbucket = F.pmod(F.xxhash64(F.col(id_col)),
-                     F.lit(base.n_buckets)).cast("int")
-    # the disjointness gate and the two delta-table writes are
-    # independent — overlap all three (guide §2.6); the commit marker
-    # lands strictly after the check passes and both writes complete,
-    # and a failed check aborts the (invisible) delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.docs, new_docs, id_col, "lsh_append_index",
-                "duplicate its band entries and self-pair on every "
-                "later probe")) if check_disjoint else None,
-            lambda: (delta.entries.repartition("bucket")
-                     .write.mode("overwrite").partitionBy("bucket")
-                     .parquet(delta_table_path(dpath, "entries"))),
-            lambda: (delta.docs.select(id_col, text_col)
-                     .withColumn("dbucket", dbucket)
-                     .repartition("dbucket").write.mode("overwrite")
-                     .partitionBy("dbucket")
-                     .parquet(delta_table_path(dpath, "docs"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    _store._append_index(_LSH, spark, path, new_docs, check_disjoint)
 
 
 def compact_lsh_index(spark, path: str) -> None:
@@ -1243,7 +1158,9 @@ def compact_lsh_index(spark, path: str) -> None:
     pointer: the versioned write repartitions entries by ``bucket`` and
     docs by ``dbucket``, collapsing the per-ingest delta files back to
     ~1 per partition.  Probes are row-identical before/after."""
-    write_lsh_index(read_lsh_index(spark, path), path)
+    _store._compact_index(_LSH, spark, path)
+
+
 
 
 # ---------------------------------------------- persisted SimHash dedup index
@@ -1315,55 +1232,41 @@ def simhash_build_index(docs: DataFrame, *, text_col: str = "text",
         bits, band_bits, n_buckets, id_col, text_col)
 
 
+def _simhash_open(spark, vpath, tables, small) -> SimHashIndex:
+    p = small["params"][0]
+    return SimHashIndex(tables["entries"], int(p.bits), int(p.band_bits),
+                        int(p.n_buckets), p.id_col, p.text_col)
+
+
+_SIMHASH = _store._IndexFamily(
+    "simhash",
+    (_store._StateTable("entries", "bucket"),),
+    (_store._SmallTable(
+        "params", "bits int, band_bits int, n_buckets int, "
+        "id_col string, text_col string",
+        lambda ix: [(ix.bits, ix.band_bits, ix.n_buckets, ix.id_col,
+                     ix.text_col)]),),
+    ("entries", None,
+     "duplicate its band entries and self-pair on every later probe"),
+    lambda base, new: simhash_build_index(
+        new, text_col=base.text_col, id_col=base.id_col, bits=base.bits,
+        band_bits=base.band_bits, n_buckets=base.n_buckets),
+    _simhash_open)
+
+
 def write_simhash_index(index: SimHashIndex, path: str) -> None:
     """Persist the index into a FRESH generation directory
     ``path/v=<n>`` and atomically swap the ``path/_CURRENT`` pointer
     (operators/index_store.py): entries partitioned by ``bucket``, one
     params row recording the banding scheme."""
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-    )
-
-    root = path
-    path = begin_version(root)
-    # entries are appendable: base data under entries/delta=0
-    (index.entries.repartition("bucket").write.mode("overwrite")
-     .partitionBy("bucket").parquet(base_table_path(path, "entries")))
-    spark = index.entries.sparkSession
-    from orange3_timeseries_spark.operators.index_store import (
-        write_small_table,
-    )
-    write_small_table(
-        spark, os.path.join(path, "params"),
-        [(index.bits, index.band_bits, index.n_buckets, index.id_col,
-          index.text_col)],
-        "bits int, band_bits int, n_buckets int, id_col string,"
-        " text_col string")
-    commit_version(root, path)
+    _store._write_index(_SIMHASH, index, path)
 
 
 def read_simhash_index(spark, path: str) -> SimHashIndex:
     """Load a persisted index; only the one-row params table is read
     eagerly.  ``path`` is the logical root — the ``_CURRENT``
     generation pointer resolves first, bare layout fallback."""
-    from orange3_timeseries_spark.operators.index_store import (
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        read_small_table_row,
-    )
-    p = read_small_table_row(spark, os.path.join(path, "params"))
-
-    # entries union COMMITTED journaled append deltas
-    return SimHashIndex(
-        read_index_table(spark, path, "entries"),
-        int(p.bits), int(p.band_bits), int(p.n_buckets), p.id_col,
-        p.text_col)
+    return _store._read_index(_SIMHASH, spark, path)
 
 
 def simhash_probe_index(index: SimHashIndex, new_docs: DataFrame, *,
@@ -1412,23 +1315,7 @@ def simhash_merge_index(base: SimHashIndex, new_docs: DataFrame, *,
     signatures are per-doc, so the merge is one delta signature pass +
     append — merged state == rebuilt state row-for-row.  Same loud
     disjoint-ids guard as every index family."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.entries, new_docs, id_col, "simhash_merge_index",
-            "duplicate its band entries and self-pair on every later "
-            "probe")
-    delta = _simhash_entries(new_docs, base.text_col, id_col,
-                             base.bits, base.band_bits, base.n_buckets)
-    cols = [id_col, "sig", "band", "band_key", "bucket"]
-    return SimHashIndex(
-        base.entries.select(*cols).unionByName(delta.select(*cols)),
-        base.bits, base.band_bits, base.n_buckets, id_col,
-        base.text_col)
+    return _store._merge_index(_SIMHASH, base, new_docs, check_disjoint)
 
 
 def simhash_append_index(spark, path: str, new_docs: DataFrame, *,
@@ -1439,46 +1326,11 @@ def simhash_append_index(spark, path: str, new_docs: DataFrame, *,
     ``lsh_append_index`` (delta-proportional IO, crash-atomic via the
     per-delta ``_COMMITTED`` marker, fragments until
     ``compact_simhash_index``)."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path), ("entries",))
-    base = read_simhash_index(spark, path)
-    delta = _simhash_entries(new_docs, base.text_col, base.id_col,
-                             base.bits, base.band_bits, base.n_buckets)
-    dpath = begin_delta(path)
-    # disjointness gate and delta write overlap (guide §2.6); commit
-    # is still gated on the check, failure aborts the invisible delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.entries, new_docs, base.id_col,
-                "simhash_append_index",
-                "duplicate its band entries and self-pair on every "
-                "later probe")) if check_disjoint else None,
-            lambda: (delta.repartition("bucket").write.mode("overwrite")
-                     .partitionBy("bucket")
-                     .parquet(delta_table_path(dpath, "entries"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    _store._append_index(_SIMHASH, spark, path, new_docs, check_disjoint)
 
 
 def compact_simhash_index(spark, path: str) -> None:
     """Rewrite the current SimHash generation into a fresh one and
     swap the pointer, collapsing per-ingest delta files back to ~1 per
     bucket partition.  Probes are row-identical before/after."""
-    write_simhash_index(read_simhash_index(spark, path), path)
+    _store._compact_index(_SIMHASH, spark, path)

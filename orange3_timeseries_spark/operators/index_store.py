@@ -1,6 +1,14 @@
-"""Versioned index storage: the write/pointer-swap lifecycle shared by
-every persisted index family (BM25 ``operators/retrieval.py``, IVF/PQ
-``operators/similarity.py``, LSH ``operators/dedup.py``, SimHash).
+"""Versioned index storage, and the ONE lifecycle every persisted index
+family runs through it.  Each family (BM25 ``operators/retrieval.py``;
+MinHash-LSH and SimHash ``operators/dedup.py``; IVF, PQ and IVF-PQ
+``operators/similarity.py``) declares an :class:`_IndexFamily` spec —
+its appendable state tables and their partition columns, its small
+driver-side tables, its disjointness guard and its delta builder — and
+its public ``write_*``/``read_*``/``*_merge_index``/``*_append_index``/
+``compact_*`` functions are thin entry points over the generic
+:func:`_write_index`, :func:`_read_index`, :func:`_merge_index`,
+:func:`_append_index` and :func:`_compact_index` below.  The
+generation/journal contract is therefore implemented once, here.
 
 Extends the reference's surface (it has no persistence at all) per the
 project brief — this repo's flagship serving contract is
@@ -36,7 +44,7 @@ root has no committed generation at all), so:
   for all index families);
 - **compaction is just a rewrite**: read the current generation,
   rewrite its partitions into the next one, swap the pointer
-  (``compact_*_index`` in each family module).
+  (:func:`_compact_index`, driven by the family spec).
 
 **Fast-ingest appends are journaled deltas** (``begin_delta`` /
 ``commit_delta``): every appendable state table carries ``delta`` as
@@ -115,12 +123,13 @@ contract documented above.
 
 from __future__ import annotations
 
+import copy
 import os
 import re
 import shutil
 import tempfile
 import uuid
-from typing import List, Optional, Tuple
+from typing import Callable, List, NamedTuple, Optional, Tuple
 
 __all__ = ["begin_version", "commit_version", "abort_version",
            "resolve_index_path",
@@ -1184,20 +1193,12 @@ def _read_small_local(path: str):
         return None
 
 
-def read_small_table_row(spark, path: str):
-    """First row of a metadata table — driver-side pyarrow on local
-    paths (no Spark job), Spark read otherwise.  A missing table
-    raises the SAME AnalysisException the plain Spark read raises
-    (callers' pre-params fallbacks key on it)."""
-    rows = _read_small_local(path)
-    if rows:
-        return rows[0]
-    return spark.read.parquet(path).first()
-
-
 def read_small_table_rows(spark, path: str):
-    """All rows of a metadata table (e.g. PQ codebooks — O(M·K) rows
-    by contract), driver-side on local paths."""
+    """All rows of a metadata table (params, centroids, codebooks —
+    O(model) rows by contract): driver-side pyarrow on local paths (no
+    Spark job), Spark read otherwise.  A missing table raises the SAME
+    AnalysisException the plain Spark read raises (the optional-table
+    fallbacks of :func:`_read_index` key on it)."""
     rows = _read_small_local(path)
     if rows is not None and rows:
         return rows
@@ -1205,4 +1206,227 @@ def read_small_table_rows(spark, path: str):
 
 
 __all__ += ["run_concurrent", "write_small_table",
-            "read_small_table_row", "read_small_table_rows"]
+            "read_small_table_rows"]
+
+
+# ---------------------------------------------------- index family lifecycle
+# Every persisted index state is per-id and additive, so one skeleton
+# serves all six families: a versioned write lands every table in a new
+# generation, an append lands the same tables as a journaled delta, a
+# merge unions per table, and a compaction is write(read()).  What
+# differs per family is data, declared once in an _IndexFamily spec.
+
+
+class _StateTable(NamedTuple):
+    """One appendable state table: journaled (``<table>/delta=<k>``),
+    read back through :func:`read_index_table`."""
+
+    name: str
+    #: parquet partition column (``bucket``, ``dbucket``,
+    #: ``centroid_id``) or None for an unpartitioned table
+    part: Optional[str] = None
+    #: index -> Column computing ``part`` at write time, for a partition
+    #: key the in-memory index does not carry (LSH docs' ``dbucket``)
+    part_expr: Optional[Callable] = None
+    #: re-aggregation of the merged table (base ∪ delta) -> df, for
+    #: tables that merge by addition rather than by union alone
+    combine: Optional[Callable] = None
+
+
+class _SmallTable(NamedTuple):
+    """One small driver-side table (params, centroids, codebooks),
+    written under ``<generation>/<name>`` by :func:`write_small_table`
+    and read back as rows for the family's ``open`` hook."""
+
+    name: str
+    schema: str
+    #: index -> rows
+    dump: Callable
+    #: a MISSING table reads as None instead of raising (legacy layouts)
+    optional: bool = False
+
+
+class _Derived(NamedTuple):
+    """Tables derived from one pinned main table instead of written
+    from the index's own frames (BM25's ``token_df`` and ``stats``)."""
+
+    main: str
+    tables: Tuple[str, ...]
+    #: main df -> bool: pin it on a versioned write?  Appends always pin
+    #: (a delta is batch-sized); above the gate the main table is
+    #: written first and the derivations read the written parquet.
+    gate: Callable
+    #: (index, main_df, dest) -> (thunks, finish): thunks join the
+    #: concurrent write wave; finish(results) runs after it
+    derive: Callable
+
+
+class _IndexFamily(NamedTuple):
+    """The declarative lifecycle spec of one persisted index family."""
+
+    #: public prefix: the guard names ``<name>_merge_index`` /
+    #: ``<name>_append_index``
+    name: str
+    tables: Tuple[_StateTable, ...]
+    small: Tuple[_SmallTable, ...]
+    #: (table, id column in it or None for ``index.id_col``,
+    #: consequence text) for the disjointness guard
+    guard: Tuple[str, Optional[str], str]
+    #: (base, new_rows, **kw) -> index holding only the new rows
+    delta: Callable
+    #: (spark, vpath, {table: df}, {small: rows | None}, **kw) -> index
+    open: Callable
+    derived: Optional[_Derived] = None
+
+
+def _write_table(df, path: str, part: Optional[str] = None) -> None:
+    """Overwrite one state table, partitioned by ``part`` if given
+    (repartitioned first, so each partition lands as ~1 file)."""
+    if part is None:
+        df.write.mode("overwrite").parquet(path)
+    else:
+        (df.repartition(part).write.mode("overwrite").partitionBy(part)
+         .parquet(path))
+
+
+def _land(fam: _IndexFamily, index, dest, *, guard=None, gate=None,
+          compact: bool = False) -> None:
+    """Write every state table of ``index`` to ``dest(table)`` as ONE
+    concurrent wave of Spark jobs (guide §2.6), with the disjointness
+    ``guard`` job joining the wave.  On ``compact`` an unpartitioned
+    table is coalesced to a byte-proportional width."""
+    d = fam.derived
+    frames = {}
+    for t in fam.tables:
+        if d is not None and t.name in d.tables:
+            continue
+        df = getattr(index, t.name)
+        if t.part_expr is not None:
+            df = df.withColumn(t.part, t.part_expr(index))
+        if compact and t.part is None:
+            from orange3_timeseries_spark.operators.partitioning import (
+                scaled_width,
+            )
+            df = df.repartition(scaled_width(df))
+        frames[t.name] = (df, t.part)
+    thunks, finish = [], None
+    if d is not None:
+        main, part = frames[d.main]
+        if gate is None or gate(main):
+            main = main.localCheckpoint()
+            frames[d.main] = (main, part)
+        else:
+            _write_table(main, dest(d.main), part)
+            del frames[d.main]
+            main = main.sparkSession.read.parquet(dest(d.main))
+        thunks, finish = d.derive(index, main, dest)
+    res = run_concurrent(
+        guard, *[lambda n=n, df=df, p=p: _write_table(df, dest(n), p)
+                 for n, (df, p) in frames.items()], *thunks)
+    if finish is not None:
+        finish(res[len(res) - len(thunks):])
+
+
+def _guard(fam: _IndexFamily, base, new_rows, verb: str):
+    """The disjointness-guard thunk: one early-exit semi-join of the new
+    ids into the indexed ones (``audit.check_disjoint_ids``)."""
+    from pyspark.sql import functions as F
+
+    from orange3_timeseries_spark.operators.audit import (
+        check_disjoint_ids,
+    )
+
+    table, col, consequence = fam.guard
+    ids = getattr(base, table)
+    if col is not None:
+        ids = ids.select(F.col(col).alias(base.id_col))
+    return lambda: check_disjoint_ids(
+        ids, new_rows, base.id_col, f"{fam.name}_{verb}_index",
+        consequence)
+
+
+def _write_index(fam: _IndexFamily, index, path: str, *,
+                 compact: bool = False) -> None:
+    """Versioned write: land every table in a FRESH generation
+    ``path/v=<n>`` (appendable tables under ``<table>/delta=0``, small
+    tables beside them), then swap the pointer."""
+    vdir = begin_version(path)
+    small = [(s, s.dump(index)) for s in fam.small]
+    _land(fam, index, lambda t: base_table_path(vdir, t),
+          gate=fam.derived.gate if fam.derived else None,
+          compact=compact)
+    spark = getattr(index, fam.tables[0].name).sparkSession
+    for s, rows in small:
+        write_small_table(spark, _join(vdir, s.name), rows, s.schema)
+    # every table of the generation is on disk — publish it
+    commit_version(path, vdir)
+
+
+def _read_index(fam: _IndexFamily, spark, path: str, **kw):
+    """Resolve the current generation; appendable tables read as ONE
+    committed-deltas scan each, small tables as driver-side rows."""
+    from pyspark.errors import AnalysisException
+
+    vpath = resolve_index_path(path)
+    tables = {t.name: read_index_table(spark, vpath, t.name)
+              for t in fam.tables}
+    small = {}
+    for s in fam.small:
+        try:
+            small[s.name] = read_small_table_rows(spark,
+                                                  _join(vpath, s.name))
+        except AnalysisException:
+            if not s.optional:
+                raise
+            small[s.name] = None
+    return fam.open(spark, vpath, tables, small, **kw)
+
+
+def _merge_index(fam: _IndexFamily, base, new_rows, check_disjoint: bool,
+                 **kw):
+    """In-memory merge: guard, one delta pass, per-table union."""
+    if check_disjoint:
+        _guard(fam, base, new_rows, "merge")()
+    delta = fam.delta(base, new_rows, **kw)
+    merged = {}
+    for t in fam.tables:
+        d = getattr(delta, t.name)
+        # column-aligned: a table READ from disk may carry a partition
+        # column (LSH docs' dbucket) the fresh delta does not
+        u = getattr(base, t.name).select(*d.columns).unionByName(d)
+        merged[t.name] = t.combine(u) if t.combine else u
+    if hasattr(base, "_replace"):
+        return base._replace(**merged)
+    out = copy.copy(base)
+    vars(out).update(merged)
+    return out
+
+
+def _append_index(fam: _IndexFamily, spark, path: str, new_rows,
+                  check_disjoint: bool, read_kw=None, **kw) -> None:
+    """Journaled append: the delta's tables land as ``delta=<k>``
+    partitions of the CURRENT generation, the guard job overlapping the
+    writes; a failure aborts the (invisible) delta, and the marker lands
+    last, outside the abort window."""
+    # fail BEFORE allocating the delta dir on a pre-journal generation
+    require_journaled_layout(resolve_index_path(path),
+                             [t.name for t in fam.tables])
+    base = _read_index(fam, spark, path, **(read_kw or {}))
+    delta = fam.delta(base, new_rows, **kw)
+    dpath = begin_delta(path)
+    try:
+        _land(fam, delta, lambda t: delta_table_path(dpath, t),
+              guard=(_guard(fam, base, new_rows, "append")
+                     if check_disjoint else None))
+    except BaseException:
+        abort_delta(dpath)
+        raise
+    # marker LAST — the atomic commit point for the whole batch
+    commit_delta(dpath)
+
+
+def _compact_index(fam: _IndexFamily, spark, path: str, **read_kw) -> None:
+    """Fold the journal: rewrite the current generation (base + committed
+    deltas) into a fresh one and swap the pointer."""
+    _write_index(fam, _read_index(fam, spark, path, **read_kw), path,
+                 compact=True)

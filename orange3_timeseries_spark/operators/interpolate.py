@@ -336,8 +336,3 @@ def _multivariate_fill(tsf: TimeSeriesFrame, value_cols, method: str):
     return (gdf.groupBy("__g__")
             .applyInPandas(lambda pdf: fill(pdf), schema=gdf.schema)
             .drop("__g__"))
-
-
-# backwards-compatible name (pre-round-2 callers / tests)
-def _multivariate_nearest(tsf: TimeSeriesFrame, value_cols):
-    return _multivariate_fill(tsf, value_cols, "nearest")

@@ -43,6 +43,7 @@ from typing import NamedTuple, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from orange3_timeseries_spark.operators import index_store as _store
 from orange3_timeseries_spark.operators.text import tokens_expr
 
 __all__ = ["bm25_topk", "rrf_fuse", "Bm25Index", "bm25_build_index",
@@ -445,6 +446,99 @@ def _pin_budget_ok(df: DataFrame) -> bool:
     return est >= (1 << 60) or est <= budget
 
 
+def _bm25_derive(index: Bm25Index, postings: DataFrame, dest):
+    """The derived-tables hook of the BM25 spec: ``token_df`` and
+    ``stats`` come from the MATERIALIZED postings, never from a second
+    corpus pass (df = postings rows per non-sentinel token; N = distinct
+    ids — sentinel rows make that complete; Σdl = per-doc dl summed).
+    The token_df write and the stats derivation (plus, for an index
+    whose stats are not trusted, the carried-stats read) join the
+    concurrent write wave; the one-row stats table lands driver-side
+    after it."""
+    thunks = [
+        lambda: _store._write_table(
+            postings.where(F.col("token").isNotNull())
+            .groupBy("token", "bucket")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+            .select("token", "df", "bucket"), dest("token_df"), "bucket"),
+        lambda: (postings.groupBy(index.id_col)
+                 .agg(F.max("dl").alias("__dl__"))
+                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                      F.sum("__dl__").cast("bigint").alias("sum_dl"))
+                 .first())]
+    if not index.stats_trusted:
+        thunks.append(lambda: index.stats.agg(
+            F.sum("n_docs").cast("bigint").alias("n_docs"),
+            F.sum("sum_dl").cast("bigint").alias("sum_dl")).first())
+
+    def finish(res):
+        derived = (res[1]["n_docs"], res[1]["sum_dl"])
+        # the derivation assumes postings are sentinel-complete (every
+        # indexed id has >= 1 row).  An index whose base came from a
+        # legacy pre-sentinel write has NO rows for token-less docs —
+        # deriving N/Σdl from it silently undercounts the stats the
+        # in-memory index carried, so fail LOUDLY on a mismatch.
+        if not index.stats_trusted and \
+                (res[2]["n_docs"], res[2]["sum_dl"]) != derived:
+            raise ValueError(
+                "write_bm25_index: stats derived from postings "
+                f"(n_docs={derived[0]}, sum_dl={derived[1]}) "
+                "disagree with the stats this index carries "
+                f"(n_docs={res[2]['n_docs']}, sum_dl={res[2]['sum_dl']})"
+                " — the postings are not a complete per-doc record "
+                "(legacy pre-sentinel base index, or externally edited "
+                "state). Rebuild the index from the source corpus.")
+        _store.write_small_table(
+            postings.sparkSession, dest("stats"),
+            [(*derived, int(index.n_buckets))],
+            "n_docs bigint, sum_dl bigint, n_buckets int")
+
+    return thunks, finish
+
+
+def _bm25_open(spark, vpath, tables, small, id_col=None) -> Bm25Index:
+    params = small["params"]
+    if params is None:
+        # missing params table = legacy layout; the stats table carries
+        # the true modulus
+        n_buckets = int(tables["stats"].select("n_buckets").first()[0])
+    else:
+        n_buckets = int(params[0]["n_buckets"])
+    if id_col is None:
+        id_col = params[0]["id_col"] if params else "doc_id"
+    return Bm25Index(tables["postings"], tables["token_df"],
+                     tables["stats"], id_col, n_buckets,
+                     stats_trusted=False)
+
+
+# df and stats merge by exact BIGINT addition; postings are per-doc rows
+_BM25 = _store._IndexFamily(
+    "bm25",
+    (_store._StateTable("postings", "bucket"),
+     _store._StateTable(
+         "token_df", "bucket",
+         combine=lambda u: (u.groupBy("token", "bucket")
+                            .agg(F.sum("df").cast("bigint").alias("df"))
+                            .select("token", "df", "bucket"))),
+     _store._StateTable(
+         "stats",
+         combine=lambda u: u.agg(
+             F.sum("n_docs").cast("bigint").alias("n_docs"),
+             F.sum("sum_dl").cast("bigint").alias("sum_dl"),
+             F.max("n_buckets").alias("n_buckets")))),
+    # one-row params table so the index reconstructs itself from disk
+    (_store._SmallTable("params", "id_col string, n_buckets int",
+                        lambda ix: [(ix.id_col, int(ix.n_buckets))],
+                        optional=True),),
+    ("postings", None, "double-count its postings"),
+    lambda base, new, text_col="text": bm25_build_index(
+        new, text_col=text_col, id_col=base.id_col,
+        n_buckets=int(base.n_buckets)),
+    _bm25_open,
+    _store._Derived("postings", ("token_df", "stats"), _pin_budget_ok,
+                    _bm25_derive))
+
+
 def write_bm25_index(index: Bm25Index, path: str) -> None:
     """Persist the index as three parquet state tables in a FRESH
     generation directory ``path/v=<n>``, then atomically swap the
@@ -474,99 +568,7 @@ def write_bm25_index(index: Bm25Index, path: str) -> None:
     derive from the written parquet): at corpus scale a second full
     copy of the postings in executor-local storage is the wrong trade
     for overlapping a bounded job tail."""
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-        run_concurrent,
-        write_small_table,
-    )
-
-    root = path
-    path = begin_version(root)
-    spark = index.postings.sparkSession
-    # appendable tables land under <table>/delta=0 — the journaled
-    # layout read_index_table / *_append_index share (delta is a
-    # leading partition level, so later appends are partition dirs of
-    # the SAME scan, never extra plan nodes)
-    pinned = _pin_budget_ok(index.postings)
-    if pinned:
-        pr = index.postings.localCheckpoint()
-
-        def _write_postings():
-            (pr.repartition("bucket").write.mode("overwrite")
-             .partitionBy("bucket")
-             .parquet(base_table_path(path, "postings")))
-    else:
-        (index.postings.repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket").parquet(base_table_path(path,
-                                                        "postings")))
-        pr = spark.read.parquet(base_table_path(path, "postings"))
-        _write_postings = None
-
-    # token_df write, stats derivation, and the optional carried-stats
-    # cross-check are INDEPENDENT jobs over the materialized postings —
-    # run them concurrently (index_store.run_concurrent, guide §2.6) so
-    # one write's task tail back-fills the other's
-    def _write_token_df():
-        (pr.where(F.col("token").isNotNull())
-         .groupBy("token", "bucket")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-         .select("token", "df", "bucket")
-         .repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket").parquet(base_table_path(path,
-                                                        "token_df")))
-
-    def _derive_stats():
-        return (pr.groupBy(index.id_col)
-                .agg(F.max("dl").alias("__dl__"))
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                     F.sum("__dl__").cast("bigint").alias("sum_dl"))
-                .first())
-
-    def _carried_stats():
-        return index.stats.agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("sum_dl").cast("bigint").alias("sum_dl")).first()
-
-    # the pinned postings write (when active) joins the same wave —
-    # run_concurrent drops None thunks, so the derivation results are
-    # always the LAST one/two entries regardless of the pin gate
-    res = run_concurrent(
-        _write_postings, _write_token_df, _derive_stats,
-        None if index.stats_trusted else _carried_stats)
-    derived = res[-1] if index.stats_trusted else res[-2]
-    carried = None if index.stats_trusted else res[-1]
-    if not index.stats_trusted:
-        # the derivation assumes postings are sentinel-complete (every
-        # indexed id has >= 1 row).  An index whose base came from a
-        # legacy pre-sentinel write has NO rows for token-less docs —
-        # deriving N/Σdl from it silently undercounts the stats the
-        # in-memory index carried.  Cross-check against the carried
-        # stats (SUM-aggregated: merged/fragmented stats may be
-        # multi-row) and fail LOUDLY on mismatch.
-        if (carried["n_docs"], carried["sum_dl"]) != \
-                (derived["n_docs"], derived["sum_dl"]):
-            raise ValueError(
-                "write_bm25_index: stats derived from postings "
-                f"(n_docs={derived['n_docs']}, sum_dl={derived['sum_dl']}) "
-                "disagree with the stats this index carries "
-                f"(n_docs={carried['n_docs']}, sum_dl={carried['sum_dl']})"
-                " — the postings are not a complete per-doc record "
-                "(legacy pre-sentinel base index, or externally edited "
-                "state). Rebuild the index from the source corpus.")
-    write_small_table(
-        spark, base_table_path(path, "stats"),
-        [(derived["n_docs"], derived["sum_dl"], int(index.n_buckets))],
-        "n_docs bigint, sum_dl bigint, n_buckets int")
-    # one-row params table so the index reconstructs itself from disk
-    # (the LSH/IVF families' contract): without it a reader had to
-    # rediscover the build-time id column out-of-band
-    write_small_table(spark, os.path.join(path, "params"),
-                      [(index.id_col, int(index.n_buckets))],
-                      "id_col string, n_buckets int")
-    # every table of the generation is on disk — publish it
-    commit_version(root, path)
+    _store._write_index(_BM25, index, path)
 
 
 def read_bm25_index(spark: SparkSession, path: str,
@@ -585,35 +587,7 @@ def read_bm25_index(spark: SparkSession, path: str,
     ``path`` is the LOGICAL index root: the read resolves the
     ``_CURRENT`` generation pointer first (operators/index_store.py),
     falling back to the bare legacy layout when no pointer exists."""
-    from pyspark.errors import AnalysisException
-
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    # base tables union COMMITTED journaled append deltas
-    # (index_store.read_index_table) — a torn append is invisible
-    stats = read_index_table(spark, path, "stats")
-    try:
-        from orange3_timeseries_spark.operators.index_store import (
-            read_small_table_row,
-        )
-        p = read_small_table_row(spark, os.path.join(path, "params"))
-        if id_col is None:
-            id_col = p["id_col"]
-        n_buckets = int(p["n_buckets"])
-    except AnalysisException:
-        # missing params table = legacy layout; the stats table (whose
-        # read above already succeeded) carries the true modulus
-        if id_col is None:
-            id_col = "doc_id"
-        n_buckets = int(stats.select("n_buckets").first()[0])
-    return Bm25Index(
-        read_index_table(spark, path, "postings"),
-        read_index_table(spark, path, "token_df"),
-        stats, id_col, n_buckets, stats_trusted=False)
+    return _store._read_index(_BM25, spark, path, id_col=id_col)
 
 
 def bm25_topk_from_index(index: Bm25Index, queries: DataFrame, *,
@@ -705,40 +679,8 @@ def bm25_merge_index(base: Bm25Index, new_docs: DataFrame, *,
     tf aggregation) plus the optional disjointness scan; the df merge
     shuffles at most |vocab| skinny rows and the stats merge is two
     one-row tables."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(base.postings, new_docs, id_col,
-                           "bm25_merge_index",
-                           "double-count its postings")
-    # the attr is authoritative (build/read both set it) — executing
-    # base.stats here would re-run a corpus-sized aggregate on a
-    # freshly built, not-yet-persisted base
-    n_buckets = int(base.n_buckets)
-    delta = bm25_build_index(new_docs, text_col=text_col,
-                             id_col=id_col, n_buckets=n_buckets)
-    postings = base.postings.select(
-        "token", id_col, "tf", "dl", "bucket").unionByName(
-        delta.postings.select("token", id_col, "tf", "dl", "bucket"))
-    token_df = (base.token_df.select("token", "df", "bucket")
-                .unionByName(delta.token_df
-                             .select("token", "df", "bucket"))
-                .groupBy("token", "bucket")
-                .agg(F.sum("df").cast("bigint").alias("df"))
-                .select("token", "df", "bucket"))
-    stats = (base.stats.select("n_docs", "sum_dl", "n_buckets")
-             .unionByName(delta.stats
-                          .select("n_docs", "sum_dl", "n_buckets"))
-             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"),
-                  F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-                  F.max("n_buckets").alias("n_buckets")))
-    # the delta is sentinel-complete by construction; trust follows the
-    # base (a read-from-disk base keeps the write-time cross-check on)
-    return Bm25Index(postings, token_df, stats, id_col, n_buckets,
-                     stats_trusted=base.stats_trusted)
+    return _store._merge_index(_BM25, base, new_docs, check_disjoint,
+                               text_col=text_col)
 
 
 def bm25_append_index(spark: SparkSession, path: str,
@@ -782,84 +724,8 @@ def bm25_append_index(spark: SparkSession, path: str,
     file per touched bucket per append inside the same scan);
     ``compact_bm25_index`` folds the deltas into a fresh canonical
     generation (hash-identical serves) and resets the count."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-        run_concurrent,
-        write_small_table,
-    )
-
-    # fail BEFORE allocating the delta dir on a pre-journal generation
-    require_journaled_layout(resolve_index_path(path),
-                             ("postings", "token_df", "stats"))
-    base = read_bm25_index(spark, path)
-    delta = bm25_build_index(new_docs, text_col=text_col,
-                             id_col=base.id_col,
-                             n_buckets=base.n_buckets)
-    # pin the delta postings so the three table writes share ONE
-    # tokenize pass (same reason write_bm25_index derives token_df and
-    # stats from the WRITTEN postings): without the pin each .write
-    # re-executes the explode+tf aggregation over the batch
-    dp = delta.postings.localCheckpoint()
-    dpath = begin_delta(path)
-    bucket = F.pmod(F.xxhash64(F.col("token")),
-                    F.lit(base.n_buckets)).cast("int")
-
-    # the three delta-table writes all read the PINNED postings and are
-    # independent of each other — overlap them (guide §2.6); the commit
-    # marker still lands strictly after all three complete
-    def _w_postings():
-        (dp.repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket")
-         .parquet(delta_table_path(dpath, "postings")))
-
-    def _w_token_df():
-        (dp.where(F.col("token").isNotNull())
-         .groupBy("token")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-         .select("token", "df", bucket.alias("bucket"))
-         .repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket")
-         .parquet(delta_table_path(dpath, "token_df")))
-
-    def _w_stats():
-        # stats derived from the pinned postings — sentinel rows make
-        # them a complete per-doc record, exactly the write path's
-        # derivation; the one-row result lands driver-side
-        st = (dp.groupBy(base.id_col).agg(F.max("dl").alias("__dl__"))
-              .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                   F.sum("__dl__").cast("bigint").alias("sum_dl"))
-              .first())
-        write_small_table(
-            spark, delta_table_path(dpath, "stats"),
-            [(st["n_docs"], st["sum_dl"], int(base.n_buckets))],
-            "n_docs bigint, sum_dl bigint, n_buckets int")
-
-    # the disjointness gate is one more independent job — overlap it
-    # with the three writes (guide §2.6); commit is still gated on the
-    # check, a failure aborts the (invisible) delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.postings, new_docs, base.id_col,
-                "bm25_append_index",
-                "double-count its postings")) if check_disjoint
-            else None,
-            _w_postings, _w_token_df, _w_stats)
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    # marker LAST — the atomic commit point for the whole batch
-    commit_delta(dpath)
+    _store._append_index(_BM25, spark, path, new_docs, check_disjoint,
+                         text_col=text_col)
 
 
 def compact_bm25_index(spark: SparkSession, path: str) -> None:
@@ -873,7 +739,7 @@ def compact_bm25_index(spark: SparkSession, path: str) -> None:
     before/after (the write-time stats cross-check verifies the
     derived counts against the carried ones, and
     tests/test_index_lifecycle.py asserts result equality)."""
-    write_bm25_index(read_bm25_index(spark, path), path)
+    _store._compact_index(_BM25, spark, path)
 
 
 __all__ += ["bm25_merge_index", "bm25_append_index",

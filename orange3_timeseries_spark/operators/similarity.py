@@ -18,6 +18,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from orange3_timeseries_spark.operators import index_store as _store
 from orange3_timeseries_spark.operators.hashing import phash
 from orange3_timeseries_spark.operators.localrel import local_df
 from orange3_timeseries_spark.operators.partitioning import (
@@ -1124,67 +1125,74 @@ def write_ivf_index(index: IvfIndex, path: str) -> None:
     ``centroid_id`` so serve-time probe filters become parquet
     PartitionFilters; a one-row params table records the assignment
     rule so merges after a read cannot desynchronize from it."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-    )
-
-    from orange3_timeseries_spark.operators.index_store import (
-        write_small_table,
-    )
-
-    root = path
-    path = begin_version(root)
-    spark = index.lists.sparkSession
-    # centroids are O(k·d) by contract (collected/broadcast at serve
-    # time) and usually already a LocalRelation — persist them
-    # driver-side like params/codebooks instead of scheduling a Spark
-    # job for ~16 rows (guide §5.3); lists are appendable: base data
-    # under lists/delta=0 (the journaled layout — appends become
-    # partition dirs of ONE scan)
-    cent_rows = index.centroids.select("centroid_id",
-                                       "centroid").collect()
-    (index.lists.repartition("centroid_id")
-     .write.mode("overwrite").partitionBy("centroid_id")
-     .parquet(base_table_path(path, "lists")))
-    write_small_table(spark, os.path.join(path, "centroids"),
-                      [(int(r["centroid_id"]),
-                        [float(x) for x in r["centroid"]])
-                       for r in cent_rows],
-                      "centroid_id int, centroid array<double>")
-    write_small_table(spark, os.path.join(path, "params"),
-                      [(bool(index.two_level),)], "two_level boolean")
-    commit_version(root, path)
+    _store._write_index(_IVF, index, path)
 
 
-def _centroids_df_from_disk(spark, vpath: str):
-    """The persisted coarse-quantizer table as a DataFrame.  Centroids
-    are O(k·d) by contract ("broadcast/collected at serve time"), so on
-    local paths they load driver-side (index_store, no Spark job) and
-    come back as the SAME local-relation shape the live build path's
-    ``createDataFrame`` produces — every later ``collect()`` at a
+def _centroid_list(index):
+    """The frozen coarse quantizer as plain lists, in centroid-id order
+    (O(k·d) — a LocalTableScan on any index built or read here)."""
+    return [[float(x) for x in r["centroid"]]
+            for r in index.centroids.orderBy("centroid_id").collect()]
+
+
+def _centroids_from_rows(spark, rows):
+    """Persisted centroid rows as the SAME local-relation shape the live
+    build path produces — every later ``collect()`` at a
     serve/merge/append/drift site is then a LocalTableScan, not a
-    repeated parquet scan job.  Remote paths keep the plain Spark
-    read."""
-    import os
+    repeated parquet scan job."""
+    return local_df(
+        spark,
+        [(int(r["centroid_id"]), [float(x) for x in r["centroid"]])
+         for r in sorted(rows, key=lambda r: int(r["centroid_id"]))],
+        "centroid_id int, centroid array<double>")
 
-    from orange3_timeseries_spark.operators.index_store import (
-        _read_small_local,
-    )
 
-    cpath = os.path.join(vpath, "centroids")
-    rows = _read_small_local(cpath)
-    if rows:
-        rows = sorted(rows, key=lambda r: int(r["centroid_id"]))
-        return local_df(
-            spark,
-            [(int(r["centroid_id"]), [float(x) for x in r["centroid"]])
-             for r in rows],
-            "centroid_id int, centroid array<double>")
-    return spark.read.parquet(cpath)
+def _ivf_delta(base: IvfIndex, new_vectors: DataFrame,
+               vec_col: str = "embedding") -> IvfIndex:
+    # assigned under the base's rule (two_level, persisted in params):
+    # flat vs two-level differ on boundary vectors
+    lists = _assign_centroid(
+        new_vectors.select(F.col(base.id_col).alias("nn_id"),
+                           _as_double(F.col(vec_col)).alias("cvec")),
+        "cvec", _centroid_list(base), two_level=base.two_level
+    ).select("centroid_id", "nn_id", "cvec")
+    return IvfIndex(base.centroids, lists, base.id_col,
+                    two_level=base.two_level)
+
+
+def _ivf_open(spark, vpath, tables, small, id_col="vec_id") -> IvfIndex:
+    if not small["params"]:
+        raise ValueError(
+            f"read_ivf_index: no readable params table under {vpath!r} "
+            "— cannot recover the assignment rule this index was "
+            "built with (flat vs two-level assign differ on boundary "
+            "vectors, so a merge under a guessed rule would silently "
+            "desynchronize from the lists). Rebuild the index with "
+            "the current write_ivf_index, or write the one-row params "
+            "parquet yourself if the rule is known.")
+    return IvfIndex(_centroids_from_rows(spark, small["centroids"]),
+                    tables["lists"], id_col,
+                    two_level=bool(small["params"][0]["two_level"]))
+
+
+# centroids are O(k·d) by contract (collected at serve time), so they
+# persist driver-side like params/codebooks
+_CENTROIDS = _store._SmallTable(
+    "centroids", "centroid_id int, centroid array<double>",
+    lambda ix: [(int(r["centroid_id"]), [float(x) for x in r["centroid"]])
+                for r in ix.centroids.select("centroid_id",
+                                             "centroid").collect()])
+
+_IVF = _store._IndexFamily(
+    "ivf",
+    (_store._StateTable("lists", "centroid_id"),),
+    (_CENTROIDS,
+     # the assignment rule, so merges after a read cannot desync from it
+     _store._SmallTable("params", "two_level boolean",
+                        lambda ix: [(bool(ix.two_level),)],
+                        optional=True)),
+    ("lists", "nn_id", "duplicate its list entry"),
+    _ivf_delta, _ivf_open)
 
 
 def read_ivf_index(spark, path: str, id_col: str = "vec_id") -> IvfIndex:
@@ -1198,36 +1206,58 @@ def read_ivf_index(spark, path: str, id_col: str = "vec_id") -> IvfIndex:
     ``path`` is the LOGICAL index root: the ``_CURRENT`` generation
     pointer resolves first (operators/index_store.py), falling back to
     the bare legacy layout when no pointer exists."""
-    import os
+    return _store._read_index(_IVF, spark, path, id_col=id_col)
 
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        resolve_index_path,
+
+def _probe_prelude(who: str, what: str, index, cells: DataFrame,
+                   q: DataFrame, query_id_col: str, vcol: str,
+                   nprobe: int, prune: bool):
+    """The shared serve prelude of the IVF and IVF-PQ from-index paths:
+    validate and collect the O(k·d) centroid table, and — when the
+    queries fit the driver-collect budget — collect them ONCE to feed
+    both the probed-cell partition prune of ``cells`` and the kernel
+    (re-handed down as a LocalRelation, so the kernel's own collect is
+    a zero-task driver read).  Above the budget the prune is skipped:
+    it is a scan-pruning aid only (the centroid_id equi-join restricts
+    candidates to probed cells regardless), and the kernel's own gate
+    routes the probe through the distributed shape.  Returns
+    ``(cells, q, C)``."""
+    import numpy as np
+
+    from orange3_timeseries_spark.operators.localrel import (
+        driver_collect_ok,
     )
 
-    path = resolve_index_path(path)
-    from orange3_timeseries_spark.operators.index_store import (
-        read_small_table_row,
-    )
-    try:
-        two_level = bool(
-            read_small_table_row(spark, os.path.join(path, "params"))
-            ["two_level"])
-    except Exception as exc:
+    cent_rows = index.centroids.orderBy("centroid_id").collect()
+    # the probe emits ARGSORT POSITIONS into C as join keys against
+    # centroid_id — valid only when ids are exactly 0..k-1; a gapped
+    # hand-edited centroid table would silently probe the WRONG cells
+    ids = [int(r["centroid_id"]) for r in cent_rows]
+    if ids != list(range(len(ids))):
         raise ValueError(
-            f"read_ivf_index: no readable params table under {path!r} "
-            "— cannot recover the assignment rule this index was "
-            "built with (flat vs two-level assign differ on boundary "
-            "vectors, so a merge under a guessed rule would silently "
-            "desynchronize from the lists). Rebuild the index with "
-            "the current write_ivf_index, or write the one-row params "
-            "parquet yourself if the rule is known.") from exc
-    return IvfIndex(
-        _centroids_df_from_disk(spark, path),
-        # lists union COMMITTED journaled append deltas — a torn
-        # append is invisible (index_store.read_index_table)
-        read_index_table(spark, path, "lists"), id_col,
-        two_level=two_level)
+            f"{who}: persisted centroid_ids are not the contiguous range "
+            f"0..{len(ids) - 1} (got {ids[:8]}…) — probe positions would "
+            f"desynchronize from the {what}. Rebuild the index "
+            "(the build functions number cells contiguously).")
+    C = np.array([r["centroid"] for r in cent_rows], dtype=float)
+    if prune and driver_collect_ok(q):
+        qrows = q.collect()
+        idt = dict(q.dtypes)[query_id_col]
+        q = local_df(
+            q.sparkSession,
+            [(r[query_id_col],
+              [float(x) for x in r[vcol]] if r[vcol] is not None
+              else None) for r in qrows],
+            f"{query_id_col} {idt}, {vcol} array<double>")
+        if qrows:
+            X = np.array([[float(x) for x in r[vcol]] for r in qrows],
+                         dtype=np.float64)
+            # the SAME probe computation the serve kernel runs — the
+            # filter cannot desynchronize
+            order = _ivf_probe_order(X, C, nprobe)
+            probed = sorted({int(c) for c in order.ravel()})
+            cells = cells.where(F.col("centroid_id").isin(probed))
+    return cells, q, C
 
 
 def ivf_topk_from_index(index: IvfIndex, queries: DataFrame,
@@ -1243,55 +1273,11 @@ def ivf_topk_from_index(index: IvfIndex, queries: DataFrame,
     pruning), and score through the shared kernel.  Exchanges are
     bounded by |queries| × nprobe list sizes, independent of corpus
     size."""
-    import numpy as np
-
-    cent_rows = index.centroids.orderBy("centroid_id").collect()
-    # the probe emits ARGSORT POSITIONS into C as join keys against
-    # lists.centroid_id — valid only when ids are exactly 0..k-1; a
-    # gapped hand-edited centroid table would silently probe the
-    # WRONG cells, so fail loudly instead
-    ids = [int(r["centroid_id"]) for r in cent_rows]
-    if ids != list(range(len(ids))):
-        raise ValueError(
-            "ivf_topk_from_index: persisted centroid_ids are not the "
-            f"contiguous range 0..{len(ids) - 1} (got {ids[:8]}…) — "
-            "probe positions would desynchronize from the inverted "
-            "lists. Rebuild the index (ivf_build_index numbers cells "
-            "contiguously).")
-    C = np.array([r["centroid"] for r in cent_rows], dtype=float)
-
-    from orange3_timeseries_spark.operators.localrel import (
-        driver_collect_ok,
-    )
-
-    lists = index.lists
-    qin = queries.select(F.col(query_id_col),
-                         F.col(vec_col).alias("__qv_in__"))
-    if prune_partitions and driver_collect_ok(qin):
-        # ONE collect feeds both the partition prune and the kernel:
-        # queries are driver-bounded by the contract that already
-        # broadcasts them, and re-handing them down as a LocalRelation
-        # makes the kernel's own collect a zero-task driver read.
-        # Above the driver-collect budget the prune is skipped — it is
-        # a scan-pruning aid only (the centroid_id equi-join restricts
-        # candidates to probed cells regardless), and the kernel's own
-        # gate routes the probe through the distributed shape.
-        qrows = qin.collect()
-        idt = dict(qin.dtypes)[query_id_col]
-        qin = local_df(
-            qin.sparkSession,
-            [(r[query_id_col],
-              [float(x) for x in r["__qv_in__"]]
-              if r["__qv_in__"] is not None else None) for r in qrows],
-            f"{query_id_col} {idt}, __qv_in__ array<double>")
-        if qrows:
-            X = np.array([[float(x) for x in r["__qv_in__"]]
-                          for r in qrows], dtype=np.float64)
-            # the SAME probe computation the serve kernel runs
-            # (_ivf_probe_order) — the filter cannot desynchronize
-            order = _ivf_probe_order(X, C, nprobe)
-            probed = sorted({int(c) for c in order.ravel()})
-            lists = lists.where(F.col("centroid_id").isin(probed))
+    lists, qin, C = _probe_prelude(
+        "ivf_topk_from_index", "inverted lists", index, index.lists,
+        queries.select(F.col(query_id_col),
+                       F.col(vec_col).alias("__qv_in__")),
+        query_id_col, "__qv_in__", nprobe, prune_partitions)
     return _ivf_probe_score_topk(lists, qin, C,
                                  query_id_col=query_id_col,
                                  nprobe=nprobe, k=k)
@@ -1789,29 +1775,7 @@ def write_pq_index(index: PqIndex, path: str) -> None:
     path is supported, and a crash mid-write leaves readers on the
     last complete generation.  Codes as skinny parquet, the codebooks
     exploded to (m, j, centroid) rows."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-    )
-
-    root = path
-    path = begin_version(root)
-    # codes are appendable: base data under codes/delta=0
-    index.codes.write.mode("overwrite").parquet(
-        base_table_path(path, "codes"))
-    spark = index.codes.sparkSession
-    rows = [(int(m), int(j), [float(x) for x in c])
-            for m, cb in enumerate(index.codebooks)
-            for j, c in enumerate(cb)]
-    from orange3_timeseries_spark.operators.index_store import (
-        write_small_table,
-    )
-    write_small_table(spark, os.path.join(path, "codebooks"), rows,
-                      "m int, j int, centroid array<double>")
-    commit_version(root, path)
+    _store._write_index(_PQ, index, path)
 
 
 def _codebooks_from_rows(rows, path, who):
@@ -1852,32 +1816,34 @@ def _codebooks_from_rows(rows, path, who):
     return [[by_m[m][j] for j in range(K)] for m in range(M)]
 
 
+_CODEBOOKS = _store._SmallTable(
+    "codebooks", "m int, j int, centroid array<double>",
+    lambda ix: [(m, j, [float(x) for x in c])
+                for m, cb in enumerate(ix.codebooks)
+                for j, c in enumerate(cb)])
+
+_PQ = _store._IndexFamily(
+    "pq",
+    (_store._StateTable("codes"),),
+    (_CODEBOOKS,),
+    ("codes", "nn_id", "duplicate its code row"),
+    lambda base, new, vec_col="embedding": PqIndex(
+        pq_encode(new.select(F.col(base.id_col).alias("nn_id"), vec_col),
+                  base.codebooks, vec_col=vec_col, id_col="nn_id"),
+        base.codebooks, base.id_col),
+    lambda spark, vpath, tables, small, id_col="vec_id": PqIndex(
+        tables["codes"],
+        _codebooks_from_rows(small["codebooks"], vpath, "read_pq_index"),
+        id_col))
+
+
 def read_pq_index(spark, path: str, id_col: str = "vec_id") -> PqIndex:
     """Load a persisted PQ index.  Only the O(M·K) codebook table is
     collected eagerly (the serve-time LUTs need it driver-side, the
     same bounded footprint the live path carries); codes stay lazy.
     ``path`` is the logical root — the ``_CURRENT`` generation pointer
     resolves first (operators/index_store.py), bare layout fallback."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    from orange3_timeseries_spark.operators.index_store import (
-        read_small_table_rows,
-    )
-    rows = read_small_table_rows(spark, os.path.join(path, "codebooks"))
-    codebooks = _codebooks_from_rows(rows, path, "read_pq_index")
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-    )
-
-    # codes union COMMITTED journaled append deltas — a torn append
-    # is invisible (index_store.read_index_table)
-    return PqIndex(read_index_table(spark, path, "codes"),
-                   codebooks, id_col)
+    return _store._read_index(_PQ, spark, path, id_col=id_col)
 
 
 def pq_topk_from_index(index: PqIndex, queries: DataFrame, k: int = 5,
@@ -1908,27 +1874,8 @@ def ivf_merge_index(base: IvfIndex, new_vectors: DataFrame,
     ``bm25_merge_index`` / ``lsh_merge_index``).  Note the centroids
     are NOT retrained — the standard serving trade-off; retrain +
     rebuild when drift accumulates."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.lists.select(F.col("nn_id").alias(id_col)),
-            new_vectors, id_col, "ivf_merge_index",
-            "duplicate its list entry")
-    cent_rows = base.centroids.orderBy("centroid_id").collect()
-    centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    delta = _assign_centroid(
-        new_vectors.select(F.col(id_col).alias("nn_id"),
-                           _as_double(F.col(vec_col)).alias("cvec")),
-        "cvec", centroids, two_level=base.two_level
-    ).select("centroid_id", "nn_id", "cvec")
-    return IvfIndex(base.centroids,
-                    base.lists.select("centroid_id", "nn_id", "cvec")
-                    .unionByName(delta), id_col,
-                    two_level=base.two_level)
+    return _store._merge_index(_IVF, base, new_vectors, check_disjoint,
+                               vec_col=vec_col)
 
 
 def pq_merge_index(base: PqIndex, new_vectors: DataFrame,
@@ -1939,22 +1886,8 @@ def pq_merge_index(base: PqIndex, new_vectors: DataFrame,
     merge is one delta encode pass + append — merged state == rebuilt
     state row-for-row.  Same disjoint-ids contract and loud guard as
     the other index families; codebooks are NOT retrained."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.codes.select(F.col("nn_id").alias(id_col)),
-            new_vectors, id_col, "pq_merge_index",
-            "duplicate its code row")
-    delta = pq_encode(
-        new_vectors.select(F.col(id_col).alias("nn_id"), vec_col),
-        base.codebooks, vec_col=vec_col, id_col="nn_id")
-    return PqIndex(base.codes.select("nn_id", "pq_code")
-                   .unionByName(delta.select("nn_id", "pq_code")),
-                   base.codebooks, id_col)
+    return _store._merge_index(_PQ, base, new_vectors, check_disjoint,
+                               vec_col=vec_col)
 
 
 def ivf_append_index(spark, path: str, new_vectors: DataFrame,
@@ -1974,50 +1907,8 @@ def ivf_append_index(spark, path: str, new_vectors: DataFrame,
     committed deltas, so an appended index serves row-identically to a
     rebuild.  Fragmentation (~1 delta dir per ingest) accumulates
     until ``compact_ivf_index`` resets it."""
-    import os
-
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path), ("lists",))
-    base = read_ivf_index(spark, path, id_col)
-    cent_rows = base.centroids.orderBy("centroid_id").collect()
-    centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    delta = _assign_centroid(
-        new_vectors.select(F.col(id_col).alias("nn_id"),
-                           _as_double(F.col(vec_col)).alias("cvec")),
-        "cvec", centroids, two_level=base.two_level
-    ).select("centroid_id", "nn_id", "cvec")
-    dpath = begin_delta(path)
-    # the disjointness gate and the delta write are independent Spark
-    # jobs — overlap them (guide §2.6); the COMMIT marker still lands
-    # strictly after the check passes, and a failed check aborts the
-    # (invisible) delta, so the serving state is untouched either way
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.lists.select(F.col("nn_id").alias(id_col)),
-                new_vectors, id_col, "ivf_append_index",
-                "duplicate its list entry")) if check_disjoint else None,
-            lambda: (delta.repartition("centroid_id")
-                     .write.mode("overwrite").partitionBy("centroid_id")
-                     .parquet(delta_table_path(dpath, "lists"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    _store._append_index(_IVF, spark, path, new_vectors, check_disjoint,
+                         {"id_col": id_col}, vec_col=vec_col)
 
 
 def compact_ivf_index(spark, path: str, id_col: str = "vec_id") -> None:
@@ -2026,7 +1917,7 @@ def compact_ivf_index(spark, path: str, id_col: str = "vec_id") -> None:
     collapses the per-ingest delta files back to ~1 per centroid
     partition; centroids/params are tiny and rewrite as-is.  Serves are
     row-identical before/after."""
-    write_ivf_index(read_ivf_index(spark, path, id_col), path)
+    _store._compact_index(_IVF, spark, path, id_col=id_col)
 
 
 def pq_append_index(spark, path: str, new_vectors: DataFrame,
@@ -2043,44 +1934,8 @@ def pq_append_index(spark, path: str, new_vectors: DataFrame,
     committed deltas, so an appended index serves row-identically to a
     rebuild.  One delta dir per ingest accumulates until
     ``compact_pq_index`` resets it."""
-    import os
-
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path), ("codes",))
-    base = read_pq_index(spark, path, id_col)
-    delta = pq_encode(
-        new_vectors.select(F.col(id_col).alias("nn_id"), vec_col),
-        base.codebooks, vec_col=vec_col, id_col="nn_id")
-    dpath = begin_delta(path)
-    # disjointness gate and delta write overlap (guide §2.6); commit
-    # is still gated on the check, failure aborts the invisible delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.codes.select(F.col("nn_id").alias(id_col)),
-                new_vectors, id_col, "pq_append_index",
-                "duplicate its code row")) if check_disjoint else None,
-            lambda: (delta.select("nn_id", "pq_code")
-                     .write.mode("overwrite")
-                     .parquet(delta_table_path(dpath, "codes"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    _store._append_index(_PQ, spark, path, new_vectors, check_disjoint,
+                         {"id_col": id_col}, vec_col=vec_col)
 
 
 def ivf_drift_stats(index: IvfIndex, new_vectors: DataFrame,
@@ -2117,12 +1972,10 @@ def ivf_drift_stats(index: IvfIndex, new_vectors: DataFrame,
     ≤ n_centroids rows."""
     from pyspark.sql import Window
 
-    cent_rows = index.centroids.orderBy("centroid_id").collect()
-    centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
     delta = _assign_centroid(
         new_vectors.select(F.col(id_col).alias("nn_id"),
                            _as_double(F.col(vec_col)).alias("cvec")),
-        "cvec", centroids, two_level=index.two_level
+        "cvec", _centroid_list(index), two_level=index.two_level
     ).select("centroid_id", "nn_id", "cvec")
 
     unit = float(10 ** unit_scale)
@@ -2426,13 +2279,7 @@ def compact_pq_index(spark, path: str, id_col: str = "vec_id") -> None:
     (operators/partitioning.scaled_width — codes are 8 ints per vector,
     so even a billion-vector table compacts to modest file counts).
     Serves are row-identical before/after."""
-    from orange3_timeseries_spark.operators.partitioning import (
-        scaled_width,
-    )
-
-    idx = read_pq_index(spark, path, id_col)
-    codes = idx.codes.repartition(scaled_width(idx.codes))
-    write_pq_index(PqIndex(codes, idx.codebooks, idx.id_col), path)
+    _store._compact_index(_PQ, spark, path, id_col=id_col)
 
 
 # ------------------------------------------------- persisted IVF-PQ index
@@ -2491,42 +2338,7 @@ def write_ivfpq_index(index: IvfPqIndex, path: str) -> None:
     ``centroid_id`` (probe filters become parquet PartitionFilters)
     under the journaled layout (``entries/delta=0``) so fast-ingest
     appends stay one-scan partition dirs."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-    )
-
-    from orange3_timeseries_spark.operators.index_store import (
-        write_small_table,
-    )
-
-    root = path
-    path = begin_version(root)
-    # centroids are O(k·d) by contract — persist them driver-side like
-    # codebooks/params instead of scheduling a Spark job for ~16 rows
-    # (guide §5.3); entries stay the one distributed write
-    cent_rows = index.centroids.select("centroid_id",
-                                       "centroid").collect()
-    (index.entries.repartition("centroid_id")
-     .write.mode("overwrite").partitionBy("centroid_id")
-     .parquet(base_table_path(path, "entries")))
-    spark = index.entries.sparkSession
-    write_small_table(spark, os.path.join(path, "centroids"),
-                      [(int(r["centroid_id"]),
-                        [float(x) for x in r["centroid"]])
-                       for r in cent_rows],
-                      "centroid_id int, centroid array<double>")
-    rows = [(int(m), int(j), [float(x) for x in c])
-            for m, cb in enumerate(index.codebooks)
-            for j, c in enumerate(cb)]
-    write_small_table(spark, os.path.join(path, "codebooks"), rows,
-                      "m int, j int, centroid array<double>")
-    write_small_table(spark, os.path.join(path, "params"),
-                      [(index.id_col,)], "id_col string")
-    commit_version(root, path)
+    _store._write_index(_IVFPQ, index, path)
 
 
 def read_ivfpq_index(spark, path: str,
@@ -2535,28 +2347,7 @@ def read_ivfpq_index(spark, path: str,
     tables are touched eagerly.  Entries union COMMITTED journaled
     append deltas (index_store.read_index_table) — a torn append is
     invisible."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        resolve_index_path,
-    )
-
-    from orange3_timeseries_spark.operators.index_store import (
-        read_small_table_row,
-        read_small_table_rows,
-    )
-
-    vpath = resolve_index_path(path)
-    rows = read_small_table_rows(spark,
-                                 os.path.join(vpath, "codebooks"))
-    codebooks = _codebooks_from_rows(rows, vpath, "read_ivfpq_index")
-    if id_col is None:
-        id_col = read_small_table_row(
-            spark, os.path.join(vpath, "params"))["id_col"]
-    return IvfPqIndex(
-        _centroids_df_from_disk(spark, vpath),
-        codebooks, read_index_table(spark, vpath, "entries"), id_col)
+    return _store._read_index(_IVFPQ, spark, path, id_col=id_col)
 
 
 def ivfpq_topk_from_index(index: IvfPqIndex, queries: DataFrame,
@@ -2573,66 +2364,40 @@ def ivfpq_topk_from_index(index: IvfPqIndex, queries: DataFrame,
     corpus side moves only (id, cell, M codes).  Bit-identical to the
     live :func:`ivfpq_topk` on the same models (shared probe/LUT/ADC
     expressions; codes round-trip as ints)."""
-    import numpy as np
-
-    cent_rows = index.centroids.orderBy("centroid_id").collect()
-    ids = [int(r["centroid_id"]) for r in cent_rows]
-    if ids != list(range(len(ids))):
-        raise ValueError(
-            "ivfpq_topk_from_index: persisted centroid_ids are not "
-            f"the contiguous range 0..{len(ids) - 1} (got {ids[:8]}…) "
-            "— probe positions would desynchronize from the entries. "
-            "Rebuild the index.")
-    C = np.array([r["centroid"] for r in cent_rows], dtype=float)
-
-    from orange3_timeseries_spark.operators.localrel import (
-        driver_collect_ok,
-    )
-
-    entries = index.entries
-    qbase = queries.select(F.col(query_id_col),
-                           _as_double(F.col(vec_col)).alias("qvec"))
-    if prune_partitions and driver_collect_ok(qbase):
-        # ONE collect feeds both the partition prune and the kernel
-        # (queries are driver-bounded by the broadcast contract); the
-        # LocalRelation hand-down makes the kernel's collect free.
-        # Above the driver-collect budget the prune is skipped (it is
-        # a scan-pruning aid only — the centroid_id equi-join restricts
-        # candidates regardless) and the kernel's gate routes the probe
-        # through the distributed shape.
-        qrows = qbase.collect()
-        idt = dict(qbase.dtypes)[query_id_col]
-        qbase = local_df(
-            qbase.sparkSession,
-            [(r[query_id_col],
-              [float(x) for x in r["qvec"]]
-              if r["qvec"] is not None else None) for r in qrows],
-            f"{query_id_col} {idt}, qvec array<double>")
-        if qrows:
-            X = np.array([[float(x) for x in r["qvec"]]
-                          for r in qrows], dtype=np.float64)
-            # the SAME probe computation the kernel runs
-            # (_ivf_probe_order) — the filter cannot desynchronize
-            order = _ivf_probe_order(X, C, nprobe)
-            probed = sorted({int(c) for c in order.ravel()})
-            entries = entries.where(F.col("centroid_id").isin(probed))
+    entries, qbase, C = _probe_prelude(
+        "ivfpq_topk_from_index", "entries", index, index.entries,
+        queries.select(F.col(query_id_col),
+                       _as_double(F.col(vec_col)).alias("qvec")),
+        query_id_col, "qvec", nprobe, prune_partitions)
     return _ivfpq_probe_adc_topk(entries, qbase, C, index.codebooks,
                                  nprobe=nprobe, k=k,
                                  query_id_col=query_id_col)
 
 
-def _ivfpq_delta_entries(base: IvfPqIndex, new_vectors: DataFrame,
-                         vec_col: str) -> DataFrame:
-    """One delta Arrow pass under the base's FROZEN models (collect
-    the O(k·d) centroid table, assign + encode the batch) — the shared
-    ingest step of :func:`ivfpq_merge_index` and
-    :func:`ivfpq_append_index`, so the two paths cannot diverge."""
-    cent_rows = base.centroids.orderBy("centroid_id").collect()
-    centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    return ivfpq_index(
-        new_vectors.select(F.col(base.id_col).alias("nn_id"), vec_col),
-        centroids, base.codebooks, vec_col=vec_col, id_col="nn_id"
-    ).select("centroid_id", "nn_id", "pq_code")
+def _ivfpq_open(spark, vpath, tables, small, id_col=None) -> IvfPqIndex:
+    return IvfPqIndex(
+        _centroids_from_rows(spark, small["centroids"]),
+        _codebooks_from_rows(small["codebooks"], vpath, "read_ivfpq_index"),
+        tables["entries"],
+        id_col if id_col is not None else small["params"][0]["id_col"])
+
+
+_IVFPQ = _store._IndexFamily(
+    "ivfpq",
+    (_store._StateTable("entries", "centroid_id"),),
+    (_CENTROIDS, _CODEBOOKS,
+     _store._SmallTable("params", "id_col string",
+                        lambda ix: [(ix.id_col,)], optional=True)),
+    ("entries", "nn_id", "duplicate its entry"),
+    # one delta Arrow pass under the base's FROZEN models: assign + encode
+    lambda base, new, vec_col="embedding": IvfPqIndex(
+        base.centroids, base.codebooks,
+        ivfpq_index(new.select(F.col(base.id_col).alias("nn_id"), vec_col),
+                    _centroid_list(base), base.codebooks, vec_col=vec_col,
+                    id_col="nn_id").select("centroid_id", "nn_id",
+                                           "pq_code"),
+        base.id_col),
+    _ivfpq_open)
 
 
 def ivfpq_merge_index(base: IvfPqIndex, new_vectors: DataFrame,
@@ -2644,21 +2409,8 @@ def ivfpq_merge_index(base: IvfPqIndex, new_vectors: DataFrame,
     — merged state == rebuilt state row-for-row.  Same disjoint-ids
     contract and loud guard as every other family; models are NOT
     retrained (the drift monitors signal when to)."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.entries.select(F.col("nn_id").alias(id_col)),
-            new_vectors, id_col, "ivfpq_merge_index",
-            "duplicate its entry")
-    delta = _ivfpq_delta_entries(base, new_vectors, vec_col)
-    return IvfPqIndex(base.centroids, base.codebooks,
-                      base.entries.select("centroid_id", "nn_id",
-                                          "pq_code")
-                      .unionByName(delta), id_col)
+    return _store._merge_index(_IVFPQ, base, new_vectors, check_disjoint,
+                               vec_col=vec_col)
 
 
 def ivfpq_append_index(spark, path: str, new_vectors: DataFrame,
@@ -2671,40 +2423,8 @@ def ivfpq_append_index(spark, path: str, new_vectors: DataFrame,
     ``_COMMITTED`` marker) — ingest IO proportional to the batch,
     crash-atomic, one-scan serves.  Fragmentation accumulates until
     ``compact_ivfpq_index`` resets it."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path), ("entries",))
-    base = read_ivfpq_index(spark, path, id_col)
-    delta = _ivfpq_delta_entries(base, new_vectors, vec_col)
-    dpath = begin_delta(path)
-    # disjointness gate and delta write overlap (guide §2.6); commit
-    # is still gated on the check, failure aborts the invisible delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.entries.select(F.col("nn_id").alias(base.id_col)),
-                new_vectors, base.id_col, "ivfpq_append_index",
-                "duplicate its entry")) if check_disjoint else None,
-            lambda: (delta.repartition("centroid_id")
-                     .write.mode("overwrite").partitionBy("centroid_id")
-                     .parquet(delta_table_path(dpath, "entries"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    _store._append_index(_IVFPQ, spark, path, new_vectors, check_disjoint,
+                         {"id_col": id_col}, vec_col=vec_col)
 
 
 def compact_ivfpq_index(spark, path: str,
@@ -2712,7 +2432,7 @@ def compact_ivfpq_index(spark, path: str,
     """Rewrite the current IVF-PQ generation into a fresh one and swap
     the pointer, folding append deltas back to ~1 file per centroid
     partition.  Serves are row-identical before/after."""
-    write_ivfpq_index(read_ivfpq_index(spark, path, id_col), path)
+    _store._compact_index(_IVFPQ, spark, path, id_col=id_col)
 
 
 def _train_subspace_codebooks(X, flagged, K: int, ds: int, iters: int):

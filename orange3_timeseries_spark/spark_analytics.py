@@ -57,10 +57,6 @@ def _series_schema(group_cols, df, extra_fields):
     return T.StructType(fields + extra_fields)
 
 
-def _sorted_values(pdf: pd.DataFrame, order_col: str, col: str) -> np.ndarray:
-    return pdf.sort_values(order_col)[col].to_numpy(dtype=float)
-
-
 def _order_col(tsf: TimeSeriesFrame) -> str:
     if tsf.time_col is not None:
         return tsf.time_col
