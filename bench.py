@@ -37,9 +37,18 @@ def main():
 
     import __spark_entry__ as entrymod
     from orange3_timeseries_spark import get_spark
+    from orange3_timeseries_spark.session import reset_session_state
 
     spark = get_spark("bench", master=f"local[{cpus}]",
                       extra_conf={"spark.sql.shuffle.partitions": cpus})
+
+    # a failed warm-up block silently moves its one-time cost into the
+    # first timed query of its tier: say so, and record it in the results
+    warmup_failures = []
+
+    def warmup_failed(block, exc):
+        print(f"bench: warm-up {block} failed: {exc}", file=sys.stderr)
+        warmup_failures.append({"block": block, "error": repr(exc)})
 
     # JVM / codegen / Arrow warm-up so the first timed query doesn't pay
     # one-time initialization (~5 s of JIT on a cold JVM): a window pass
@@ -56,8 +65,8 @@ def main():
         ensure_session_conf(spark)
         read_table(spark, sf_dir, "events") \
             .write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass
+    except Exception as e:
+        warmup_failed("read_table", e)
     try:
         # pandas-UDF warm-up: the first applyInPandas/mapInPandas query in
         # a session pays Python-worker fork + pandas/numpy import (~1.5-2 s
@@ -67,8 +76,8 @@ def main():
         wdf = spark.range(1000).withColumn("g", F.col("id") % 8)
         wdf.groupBy("g").applyInPandas(lambda p: p, schema=wdf.schema) \
             .write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass
+    except Exception as e:
+        warmup_failed("pandas_udf", e)
     try:
         # codegen warm-up for the dedup expression family: the minhash /
         # shingle / jaccard HOF trees compile to large generated classes
@@ -95,8 +104,8 @@ def main():
         _D.substring_pairs(tiny, "text", "doc_id", min_len=150,
                            gram_len=40, mod=4, max_df=1000) \
             .write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass
+    except Exception as e:
+        warmup_failed("dedup", e)
     try:
         # bm25-family warm-up, same rationale as the dedup block above:
         # the tokenize/score/rank kernels plus the versioned index
@@ -139,8 +148,8 @@ def main():
             # always reclaim the pid-suffixed temp dir — a failed
             # write/read/serve otherwise leaked it in /tmp (ADVICE r13)
             shutil.rmtree(wpath, ignore_errors=True)
-    except Exception:
-        pass
+    except Exception as e:
+        warmup_failed("bm25", e)
     # NOTE (r14): the warm-up preamble is FROZEN at this block set.
     # The r13 close proposed extending it to the ANN retrain tier,
     # the simhash registry and the foreachBatch spool machinery; r14
@@ -171,8 +180,8 @@ def main():
             sdf, "ts", [("value", "mean")], "1 hour", watermark="1 hour")
         run_to_memory(agg, "warmup_" + uuid.uuid4().hex[:8],
                       output_mode="complete", state_partitions=2)
-    except Exception:
-        pass
+    except Exception as e:
+        warmup_failed("streaming", e)
 
     qs = entrymod.queries()
 
@@ -220,49 +229,10 @@ def main():
 
     timings = {}
     total = 0.0
-    import gc
     for name, fn in qs.items():
-        # inter-query hygiene: py4j releases JVM plan/expression handles
-        # only when PYTHON gc runs, so a long sequential bench accumulates
-        # JVM garbage that inflates later queries 2-10x (measured: the
-        # dedup tier at 7-19 s in-sequence vs 1-4 s with this reset).
-        # Runs BEFORE the timer starts, so hygiene cost is not attributed
-        # to the query.
-        spark.catalog.clearCache()
-        try:
-            # the streaming queries leave uuid-named MEMORY-sink tables
-            # behind (their results must outlive the query call); over a
-            # ~116-query run the retained sink state inflates later
-            # queries — drop them once the previous query is forced
-            for t in spark.catalog.listTables():
-                if t.isTemporary and t.name.startswith("stream_"):
-                    spark.catalog.dropTempView(t.name)
-            # isolated streaming runs also alias their memory sink
-            # through a GLOBAL temp view — drop those too or the sink
-            # rows stay referenced for the rest of the run
-            for t in spark.catalog.listTables("global_temp"):
-                if t.name.startswith("stream_"):
-                    spark.catalog.dropGlobalTempView(t.name)
-        except Exception:
-            pass
-        try:
-            # localCheckpoint() blocks (hll_overlap, assoc_rules, psi,
-            # classifier training bases, ...) are PERSISTENT RDDs that
-            # catalog.clearCache() does NOT release — over a 242-query
-            # session the dead blocks pile up in the block manager and
-            # the r7d bench measured broad 2-5x late-session inflation
-            # (pipeline_curate_corpus 35 s in-sequence vs 4.5 s warm).
-            # Safe here: bench queries never reuse a prior query's plan.
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs() \
-                    .values():
-                rdd.unpersist(False)
-        except Exception:
-            pass
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+        # inter-query hygiene, BEFORE the timer starts so its cost is not
+        # attributed to the query (see reset_session_state for why)
+        reset_session_state(spark)
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
@@ -310,6 +280,7 @@ def main():
         "probe_median_s": probe_median_s,
         "probe_pre": probe_pre,
         "probe_post": probe_post,
+        "warmup_failures": warmup_failures,
     }
     # Durable full artifact (committed per-round as bench_results.json);
     # the driver's stdout capture keeps only a ~2 KB tail.

@@ -41,57 +41,11 @@ from orange3_timeseries_spark.operators.moving_transform import (
 )
 from orange3_timeseries_spark.operators.spiralogram import spiralogram
 from orange3_timeseries_spark.operators.timeslice import time_slice
+from orange3_timeseries_spark.session import ensure_session_conf
 from orange3_timeseries_spark.sources import read_table
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: Dict[str, str] = {}
-
-
-def ensure_session_conf(spark: SparkSession) -> SparkSession:
-    """Pin the confs the engine's semantics rely on; all are runtime-settable
-    so a driver-created session works too."""
-    from orange3_timeseries_spark.session import ship_package
-    ship_package(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Disable PySpark's per-API-call call-site capture (diagnostic only;
-    # a stack walk + JVM round-trip per Column/DataFrame call — measured
-    # 5x on expression-heavy plan construction, cf. session._DEFAULTS).
-    # The conf itself is STATIC (builder-time only, set in
-    # session._DEFAULTS); pyspark additionally caches the decision
-    # module-globally on first use, so for a session the driver created
-    # without that conf, flip the cache directly (guarded: private attr,
-    # best-effort across pyspark versions — worst case the capture just
-    # stays on).
-    try:
-        from pyspark.errors import utils as _errutils
-        _errutils._enable_debugging_cache = False
-    except Exception:
-        pass
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # keep byte-light CPU-heavy stages wide under AQE (cf. session._DEFAULTS)
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-    try:  # committer v2 for driver-created sessions (cf. session._DEFAULTS)
-        spark.sparkContext._jsc.hadoopConfiguration().set(
-            "mapreduce.fileoutputcommitter.algorithm.version", "2")
-    except Exception:
-        pass
-    try:  # avoid 200 shuffle partitions for small-SF driver runs
-        import os
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(os.cpu_count() or 8))
-    except Exception:
-        pass
-    # List partitioned index tables on the driver instead of launching a
-    # Spark job per read (delta= x bucket= dir counts trip the default
-    # threshold of 32; cf. session._DEFAULTS for the scale discussion).
-    import os as _os
-    spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold",
-        _os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
-    return spark
 
 
 def query(name: str, sql: str | None):

@@ -7,8 +7,10 @@ for calendar-key parity. Arrow is enabled for the pandas-UDF analytics tier.
 
 from __future__ import annotations
 
+import gc
 import os
 
+from pyspark.errors import utils as _pyspark_error_utils
 from pyspark.sql import SparkSession
 
 # Knobs that make sense both on local[N] and on a real cluster.  On a cluster
@@ -95,6 +97,20 @@ _DEFAULTS = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
 }
 
+# The runtime-settable _DEFAULTS that ensure_session_conf re-applies on
+# every query call, so a session the driver built without get_spark still
+# gets the engine's semantics.  spark.hadoop.* keys go to the Hadoop conf.
+_RUNTIME_PINS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.ansi.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold",
+)
+
 
 def ship_package(spark: SparkSession) -> None:
     """Make the package importable on EXECUTOR python workers regardless
@@ -135,6 +151,59 @@ def ship_package(spark: SparkSession) -> None:
         pass  # already registered on this context
     spark.conf.set(flag, "yes")
 
+
+def ensure_session_conf(spark: SparkSession) -> SparkSession:
+    """Re-apply the ``_RUNTIME_PINS`` confs the engine's semantics rely
+    on; all are runtime-settable, so a driver-created session works too.
+
+    Shuffle partitions are the one pin not taken from ``_DEFAULTS``: the
+    value the session was built with wins (``get_spark`` always sets one),
+    and ``sc.defaultParallelism`` stands in when the SparkConf has none —
+    never the host's CPU count, which would override the parallelism the
+    caller chose."""
+    ship_package(spark)
+    # PySpark caches the dataFrameDebugging decision module-globally on
+    # first use; the conf itself is static (builder-time only), so for a
+    # session built without it flip the cache directly.  Pinned against
+    # the installed PySpark by tests/test_session_state.py.
+    _pyspark_error_utils._enable_debugging_cache = False
+    sc = spark.sparkContext
+    for key in _RUNTIME_PINS:
+        if key == "spark.sql.shuffle.partitions":
+            spark.conf.set(key, sc._conf.get(key, "")
+                           or str(sc.defaultParallelism))
+        elif key.startswith("spark.hadoop."):
+            sc._jsc.hadoopConfiguration().set(key[len("spark.hadoop."):],
+                                              _DEFAULTS[key])
+        else:
+            spark.conf.set(key, _DEFAULTS[key])
+    return spark
+
+
+def reset_session_state(spark: SparkSession) -> None:
+    """Release what earlier queries left in a long-lived session, in this
+    order: cached tables, the ``stream_*`` memory-sink views (temp and
+    global temp), every persistent RDD, then Python and JVM garbage.
+
+    Every harness runs this before each timer starts.  py4j frees JVM
+    plan handles only when Python gc runs, and a long sequential run
+    otherwise inflates later queries 2-10x (the dedup tier measured 7-19 s
+    in sequence vs 1-4 s after a reset).  ``localCheckpoint()`` blocks are
+    persistent RDDs that ``clearCache`` does not release (r7d measured
+    2-5x late-session inflation from them), and streaming queries keep
+    their sink rows referenced through the views.  Unpersisting every RDD
+    is only safe between queries that reuse no earlier query's plan."""
+    spark.catalog.clearCache()
+    for t in spark.catalog.listTables():
+        if t.isTemporary and t.name.startswith("stream_"):
+            spark.catalog.dropTempView(t.name)
+    for t in spark.catalog.listTables("global_temp"):
+        if t.name.startswith("stream_"):
+            spark.catalog.dropGlobalTempView(t.name)
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
 
 
 def get_spark(app_name: str = "orange3_timeseries_spark",

@@ -11,11 +11,10 @@ Usage: PYTHONPATH=/root/repo python scripts/profile_steps.py QUERY [SF_DIR]
 from __future__ import annotations
 
 import functools
-import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import harness
 
 CALLS = []
 _depth = [0]
@@ -46,7 +45,6 @@ def patch(module):
 def main():
     qname = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
     from orange3_timeseries_spark.operators import (
         contamination,
@@ -63,26 +61,17 @@ def main():
         patch(m)
 
     import __spark_entry__ as entrymod
-    from orange3_timeseries_spark import get_spark
 
-    spark = get_spark("profile_steps", master=f"local[{cpus}]",
-                      extra_conf={"spark.sql.shuffle.partitions": cpus})
-    from pyspark.sql import functions as F
-    spark.range(1000).withColumn("g", F.col("id") % 8) \
-        .groupBy("g").applyInPandas(lambda p: p, schema="id long, g long") \
-        .write.format("noop").mode("overwrite").save()
-
+    spark = harness.start_session("profile_steps")
     fn = entrymod.queries()[qname]
     for rep in range(2):
+        harness.reset_session_state(spark)
         CALLS.clear()
-        import gc
-        spark.catalog.clearCache()
-        gc.collect()
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t_build = time.perf_counter() - t0
         t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
+        harness.force(df)
         t_serve = time.perf_counter() - t1
         total = time.perf_counter() - t0
         if rep == 0:

@@ -2,17 +2,14 @@
 """Time several driver-contract queries, N warm reps each, in ONE session.
 
 Usage: python scripts/time_many.py SF_DIR REPS QUERY [QUERY ...]
-Mirrors bench.py's hygiene (clearCache + unpersist + gc before each rep).
+Runs bench.py's session reset (``reset_session_state``) before each rep.
 Prints per-query median/min over reps as one JSON line at the end.
 """
-import gc
 import json
-import os
 import statistics
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import harness
 
 
 def main():
@@ -21,45 +18,15 @@ def main():
     names = sys.argv[3:]
 
     import __spark_entry__ as entrymod
-    from orange3_timeseries_spark import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = get_spark("time_many", master=f"local[{cpus}]",
-                      extra_conf={"spark.sql.shuffle.partitions": cpus})
-    from pyspark.sql import functions as F
-    spark.range(1000).withColumn("g", F.col("id") % 8) \
-        .groupBy("g").applyInPandas(lambda p: p, schema="id long, g long") \
-        .write.format("noop").mode("overwrite").save()
+    spark = harness.start_session("time_many")
     qs = entrymod.queries()
     out = {}
     for qname in names:
         fn = qs[qname]
-        ts = []
-        for _ in range(reps + 1):  # first rep is cold, dropped
-            spark.catalog.clearCache()
-            try:
-                for t in spark.catalog.listTables():
-                    if t.isTemporary and t.name.startswith("stream_"):
-                        spark.catalog.dropTempView(t.name)
-                for t in spark.catalog.listTables("global_temp"):
-                    if t.name.startswith("stream_"):
-                        spark.catalog.dropGlobalTempView(t.name)
-            except Exception:
-                pass
-            try:
-                for rdd in spark.sparkContext._jsc.getPersistentRDDs() \
-                        .values():
-                    rdd.unpersist(False)
-            except Exception:
-                pass
-            gc.collect()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 3))
+        # first rep is cold, dropped
+        ts = [round(t, 3) for t in harness.time_reps(
+            spark, lambda: harness.force(fn(spark, sf_dir)), reps + 1)]
         out[qname] = {"cold": ts[0], "median": round(
             statistics.median(ts[1:]), 3), "min": min(ts[1:]),
             "reps": ts[1:]}
