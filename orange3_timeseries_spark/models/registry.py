@@ -17,10 +17,11 @@ job.  ``forecast_from_model_table`` replays EXACTLY the recursion
 so a saved-then-loaded model forecasts bit-identically to the model
 that was just fit — asserted in tests/test_registry.py.
 
-Scale: fitting is the same grouped ``mapInPandas`` pass the forecast
-tier uses; the model table is O(series), not O(data); scoring is a
-map-only pass over the model table itself (no touch of the history
-data at serve time).
+Scale: fitting packs each series once and runs on the shared per-series
+batch runner, like the forecast tier (``spark_analytics._pack`` /
+``_run_units``); the model table is O(series), not O(data); scoring runs
+the same runner over the model table itself, one saved model per unit
+(no touch of the history data at serve time).
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -39,11 +39,14 @@ from orange3_timeseries_spark.models.arima import (
     arma_psi_weights,
     integrate_forecast,
 )
-from orange3_timeseries_spark.models.spark import _pack_series
+from orange3_timeseries_spark.models.spark import (
+    _FORECAST_FIELDS,
+    _INFEASIBLE_FIT,
+)
 from orange3_timeseries_spark.spark_analytics import (
-    _grouped,
-    _order_col,
-    _series_schema,
+    _columns,
+    _packed_map,
+    _run_units,
 )
 
 __all__ = ["arima_model_table", "forecast_from_model_table",
@@ -59,10 +62,8 @@ def arima_model_table(tsf: TimeSeriesFrame, cols: Sequence[str],
     state row (module docstring).  Same distributed shape as
     ``forecast_by_series``; short/degenerate series yield no row."""
     p, d, q = (int(x) for x in order)
-    ocol = _order_col(tsf)
     cols = list(cols)
-    df, groups, _ = _grouped(tsf, keep_cols=[ocol, *cols])
-    schema = _series_schema(groups, df, [
+    fields = [
         T.StructField("var", T.StringType()),
         T.StructField("p", T.IntegerType()),
         T.StructField("d", T.IntegerType()),
@@ -75,41 +76,32 @@ def arima_model_table(tsf: TimeSeriesFrame, cols: Sequence[str],
         T.StructField("e_tail", _ARR),
         T.StructField("y_tail", _ARR),
         T.StructField("n_obs", T.IntegerType()),
-    ])
-    packed = _pack_series(df, groups, ocol, cols)
+    ]
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                for name in cols:
-                    y = np.asarray(r[name], dtype=float)
-                    try:
-                        m = ARIMA((p, d, q), method=method,
-                                  quantize=quantize).fit(
-                                      y, var_names=[name])
-                    except (ValueError, np.linalg.LinAlgError,
-                            ZeroDivisionError, FloatingPointError):
-                        continue
-                    res = m.results
-                    w = m._w
-                    e = m._e
-                    rows.append(keys + [
-                        name, p, d, q, float(res.const),
-                        [float(v) for v in res.phi],
-                        [float(v) for v in res.theta],
-                        float(res.sigma2),
-                        [float(v) for v in w[len(w) - p:]] if p else [],
-                        [float(v) for v in e[len(e) - q:]] if q else [],
-                        [float(v) for v in
-                         m._y_levels[len(m._y_levels) - max(d, 1):]],
-                        int(len(y)),
-                    ])
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
+    def per_series(r):
+        rows = []
+        for name in cols:
+            y = np.asarray(r[name], dtype=float)
+            try:
+                m = ARIMA((p, d, q), method=method,
+                          quantize=quantize).fit(y, var_names=[name])
+            except _INFEASIBLE_FIT:
+                continue
+            res, w, e = m.results, m._w, m._e
+            rows.append((
+                name, p, d, q, float(res.const),
+                [float(v) for v in res.phi],
+                [float(v) for v in res.theta],
+                float(res.sigma2),
+                [float(v) for v in w[len(w) - p:]] if p else [],
+                [float(v) for v in e[len(e) - q:]] if q else [],
+                [float(v) for v in
+                 m._y_levels[len(m._y_levels) - max(d, 1):]],
+                int(len(y)),
+            ))
+        return _columns(fields, rows)
 
-    return packed.mapInPandas(run, schema=schema)
+    return _packed_map(tsf, cols, fields, per_series)
 
 
 def forecast_from_model_table(models: DataFrame, steps: int = 10,
@@ -124,45 +116,27 @@ def forecast_from_model_table(models: DataFrame, steps: int = 10,
     state_cols = {"var", "p", "d", "q", "const", "phi", "theta",
                   "sigma2", "w_tail", "e_tail", "y_tail", "n_obs"}
     groups = [c for c in models.columns if c not in state_cols]
-    fields = [models.schema[g] for g in groups]
-    schema = T.StructType(fields + [
-        T.StructField("step", T.IntegerType()),
-        T.StructField("var", T.StringType()),
-        T.StructField("forecast", T.DoubleType()),
-        T.StructField("ci_low", T.DoubleType()),
-        T.StructField("ci_high", T.DoubleType()),
-    ])
     z_q = float(norm_ppf(1 - alpha / 2))
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                d = int(r["d"])
-                phi = np.asarray(r["phi"], dtype=float)
-                theta = np.asarray(r["theta"], dtype=float)
-                # the SAME functions the live ARIMA._predict calls —
-                # the bit-identical contract is structural, not
-                # copy-paste-synced
-                preds_diff = arma_forecast_diff(
-                    float(r["const"]), phi, theta,
-                    [float(v) for v in r["w_tail"]],
-                    [float(v) for v in r["e_tail"]], steps)
-                forecast = integrate_forecast(
-                    preds_diff, np.asarray(r["y_tail"], dtype=float), d)
-                psi = arma_psi_weights(phi, theta, d, steps)
-                err = z_q * np.sqrt(float(r["sigma2"])
-                                    * np.cumsum(psi ** 2))
-                for h in range(steps):
-                    rows.append(keys + [h + 1, r["var"],
-                                        float(forecast[h]),
-                                        float(forecast[h] - err[h]),
-                                        float(forecast[h] + err[h])])
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
+    def per_model(r):
+        d = int(r["d"])
+        phi = np.asarray(r["phi"], dtype=float)
+        theta = np.asarray(r["theta"], dtype=float)
+        # the SAME functions the live ARIMA._predict calls — the
+        # bit-identical contract is structural, not copy-paste-synced
+        preds_diff = arma_forecast_diff(
+            float(r["const"]), phi, theta,
+            [float(v) for v in r["w_tail"]],
+            [float(v) for v in r["e_tail"]], steps)
+        forecast = integrate_forecast(
+            preds_diff, np.asarray(r["y_tail"], dtype=float), d)
+        psi = arma_psi_weights(phi, theta, d, steps)
+        err = z_q * np.sqrt(float(r["sigma2"]) * np.cumsum(psi ** 2))
+        fc = np.asarray(forecast, dtype=float)
+        return {"step": np.arange(1, steps + 1), "var": [r["var"]] * steps,
+                "forecast": fc, "ci_low": fc - err, "ci_high": fc + err}
 
-    return models.mapInPandas(run, schema=schema)
+    return _run_units(models, groups, _FORECAST_FIELDS, per_model)
 
 
 def write_model_table(models: DataFrame, path: str) -> None:
@@ -185,10 +159,8 @@ def var_model_table(tsf: TimeSeriesFrame, cols: Sequence[str],
     ``VAR._predict`` exactly."""
     from orange3_timeseries_spark.models.var import VAR
 
-    ocol = _order_col(tsf)
     cols = list(cols)
-    df, groups, _ = _grouped(tsf, keep_cols=[ocol, *cols])
-    schema = _series_schema(groups, df, [
+    fields = [
         T.StructField("vars", T.ArrayType(T.StringType())),
         T.StructField("k_ar", T.IntegerType()),
         T.StructField("neqs", T.IntegerType()),
@@ -199,42 +171,32 @@ def var_model_table(tsf: TimeSeriesFrame, cols: Sequence[str],
         T.StructField("n_trend", T.IntegerType()),
         T.StructField("sigma_u", _ARR),      # (k, k) row-major
         T.StructField("y_tail", _ARR),       # (k_ar, k) row-major
-    ])
-    packed = _pack_series(df, groups, ocol, cols)
+    ]
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                try:
-                    y = np.column_stack(
-                        [np.asarray(r[c], dtype=float) for c in cols])
-                    m = VAR(maxlags=maxlags, trend=trend).fit(
-                        y, var_names=cols)
-                except (ValueError, np.linalg.LinAlgError,
-                        ZeroDivisionError, FloatingPointError):
-                    continue
-                res = m.results
-                # tail from the NaN-FILTERED history the model actually
-                # fit (m._y), not the raw packed columns: _pack_series
-                # preserves nulls as NaN, and VAR._predict forecasts
-                # from the filtered rows
-                tail = (m._y[-res.k_ar:] if res.k_ar
-                        else np.empty((0, res.neqs)))
-                rows.append(keys + [
-                    list(cols), int(res.k_ar), int(res.neqs),
-                    int(res.nobs), res.trend,
-                    [float(v) for v in np.ravel(res.coefs)],
-                    [float(v) for v in np.ravel(res.trend_coefs)],
-                    int(res.trend_coefs.shape[0]),
-                    [float(v) for v in np.ravel(res.sigma_u)],
-                    [float(v) for v in np.ravel(tail)],
-                ])
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
+    def per_series(r):
+        try:
+            y = np.column_stack(
+                [np.asarray(r[c], dtype=float) for c in cols])
+            m = VAR(maxlags=maxlags, trend=trend).fit(y, var_names=cols)
+        except _INFEASIBLE_FIT:
+            return None
+        res = m.results
+        # tail from the NaN-FILTERED history the model actually fit
+        # (m._y), not the raw packed columns: the pack preserves nulls as
+        # NaN, and VAR._predict forecasts from the filtered rows
+        tail = (m._y[-res.k_ar:] if res.k_ar
+                else np.empty((0, res.neqs)))
+        return _columns(fields, [(
+            list(cols), int(res.k_ar), int(res.neqs),
+            int(res.nobs), res.trend,
+            [float(v) for v in np.ravel(res.coefs)],
+            [float(v) for v in np.ravel(res.trend_coefs)],
+            int(res.trend_coefs.shape[0]),
+            [float(v) for v in np.ravel(res.sigma_u)],
+            [float(v) for v in np.ravel(tail)],
+        )])
 
-    return packed.mapInPandas(run, schema=schema)
+    return _packed_map(tsf, cols, fields, per_series)
 
 
 def forecast_from_var_model_table(models: DataFrame, steps: int = 10,
@@ -249,52 +211,29 @@ def forecast_from_var_model_table(models: DataFrame, steps: int = 10,
     state_cols = {"vars", "k_ar", "neqs", "nobs", "trend", "coefs",
                   "trend_coefs", "n_trend", "sigma_u", "y_tail"}
     groups = [c for c in models.columns if c not in state_cols]
-    fields = [models.schema[g] for g in groups]
-    schema = T.StructType(fields + [
-        T.StructField("step", T.IntegerType()),
-        T.StructField("var", T.StringType()),
-        T.StructField("forecast", T.DoubleType()),
-        T.StructField("ci_low", T.DoubleType()),
-        T.StructField("ci_high", T.DoubleType()),
-    ])
     q_z = float(norm_ppf(1 - alpha / 2))
     nan_ics = {"aic": float("nan"), "bic": float("nan"),
                "hqic": float("nan"), "fpe": float("nan")}
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                p, k = int(r["k_ar"]), int(r["neqs"])
-                n_tr = int(r["n_trend"])
-                res = _VarResults(
-                    coefs=np.asarray(r["coefs"],
-                                     dtype=float).reshape(p, k, k),
-                    trend_coefs=np.asarray(
-                        r["trend_coefs"], dtype=float).reshape(n_tr, k),
-                    sigma_u=np.asarray(r["sigma_u"],
-                                       dtype=float).reshape(k, k),
-                    resid=None, fitted=None, k_ar=p, neqs=k,
-                    nobs=int(r["nobs"]), trend=r["trend"],
-                    ics=nan_ics)
-                tail = np.asarray(r["y_tail"],
-                                  dtype=float).reshape(-1, k)
-                fc = res.forecast(tail, steps)
-                sigma = np.sqrt(np.abs(np.diagonal(
-                    res.mse(steps), axis1=1, axis2=2)))
-                err = q_z * sigma
-                names = list(r["vars"])
-                for h in range(steps):
-                    for j, name in enumerate(names):
-                        rows.append(keys + [h + 1, name,
-                                            float(fc[h, j]),
-                                            float(fc[h, j] - err[h, j]),
-                                            float(fc[h, j] + err[h, j])])
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
+    def per_model(r):
+        p, k = int(r["k_ar"]), int(r["neqs"])
+        n_tr = int(r["n_trend"])
+        res = _VarResults(
+            coefs=np.asarray(r["coefs"], dtype=float).reshape(p, k, k),
+            trend_coefs=np.asarray(
+                r["trend_coefs"], dtype=float).reshape(n_tr, k),
+            sigma_u=np.asarray(r["sigma_u"], dtype=float).reshape(k, k),
+            resid=None, fitted=None, k_ar=p, neqs=k,
+            nobs=int(r["nobs"]), trend=r["trend"], ics=nan_ics)
+        tail = np.asarray(r["y_tail"], dtype=float).reshape(-1, k)
+        fc = res.forecast(tail, steps)
+        err = q_z * np.sqrt(np.abs(np.diagonal(
+            res.mse(steps), axis1=1, axis2=2)))
+        return {"step": np.repeat(np.arange(1, steps + 1), k),
+                "var": list(r["vars"]) * steps, "forecast": np.ravel(fc),
+                "ci_low": np.ravel(fc - err), "ci_high": np.ravel(fc + err)}
 
-    return models.mapInPandas(run, schema=schema)
+    return _run_units(models, groups, _FORECAST_FIELDS, per_model)
 
 
 __all__ += ["var_model_table", "forecast_from_var_model_table"]
@@ -302,7 +241,7 @@ __all__ += ["var_model_table", "forecast_from_var_model_table"]
 
 #: valid ``family`` values for the smoothing state tables; dispatch is
 #: the if-chains in ``smoothing_model_table.fit_state`` and
-#: ``forecast_from_smoothing_table.run`` — extend BOTH when adding one
+#: ``forecast_from_smoothing_table.per_model`` — extend BOTH when adding one
 _SMOOTH_FAMILIES = ("holt", "holt_damped", "holt_winters", "theta")
 
 
@@ -338,10 +277,8 @@ def smoothing_model_table(tsf: TimeSeriesFrame, cols: Sequence[str],
 
     if family not in _SMOOTH_FAMILIES:
         raise ValueError(f"unknown smoothing family {family!r}")
-    ocol = _order_col(tsf)
     cols = list(cols)
-    df, groups, _ = _grouped(tsf, keep_cols=[ocol, *cols])
-    schema = _series_schema(groups, df, [
+    fields = [
         T.StructField("var", T.StringType()),
         T.StructField("family", T.StringType()),
         T.StructField("level", T.DoubleType()),
@@ -350,8 +287,7 @@ def smoothing_model_table(tsf: TimeSeriesFrame, cols: Sequence[str],
         T.StructField("aux", _ARR),
         T.StructField("phi", T.DoubleType()),
         T.StructField("n_obs", T.IntegerType()),
-    ])
-    packed = _pack_series(df, groups, ocol, cols)
+    ]
 
     def fit_state(x):
         if family == "holt":
@@ -375,25 +311,17 @@ def smoothing_model_table(tsf: TimeSeriesFrame, cols: Sequence[str],
         a, b, l, _n = st
         return l, b, [], [a], 1.0
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                for name in cols:
-                    x = np.asarray(r[name], dtype=float)
-                    x = x[~np.isnan(x)]
-                    st = fit_state(x)
-                    if st is None:
-                        continue
-                    level, trend, season, aux, phi_out = st
-                    rows.append(keys + [name, family, level, trend,
-                                        season, aux, phi_out,
-                                        int(len(x))])
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
+    def per_series(r):
+        rows = []
+        for name in cols:
+            x = np.asarray(r[name], dtype=float)
+            x = x[~np.isnan(x)]
+            st = fit_state(x)
+            if st is not None:
+                rows.append((name, family, *st, int(len(x))))
+        return _columns(fields, rows)
 
-    return packed.mapInPandas(run, schema=schema)
+    return _packed_map(tsf, cols, fields, per_series)
 
 
 def forecast_from_smoothing_table(models: DataFrame,
@@ -414,45 +342,33 @@ def forecast_from_smoothing_table(models: DataFrame,
     state_cols = {"var", "family", "level", "trend", "season", "aux",
                   "phi", "n_obs"}
     groups = [c for c in models.columns if c not in state_cols]
-    fields = [models.schema[g] for g in groups]
-    schema = T.StructType(fields + [
-        T.StructField("step", T.IntegerType()),
-        T.StructField("var", T.StringType()),
-        T.StructField("forecast", T.DoubleType()),
-    ])
+    fields = _FORECAST_FIELDS[:3]
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                fam = r["family"]
-                level, trend = float(r["level"]), float(r["trend"])
-                if fam == "holt":
-                    fc = holt_forecast_from_state(level, trend, steps)
-                elif fam == "holt_damped":
-                    fc = damped_forecast_from_state(
-                        level, trend, float(r["phi"]), steps)
-                elif fam == "holt_winters":
-                    fc = hw_forecast_from_state(
-                        level, trend, [float(s) for s in r["season"]],
-                        steps)
-                elif fam == "theta":
-                    fc = theta_forecast_from_state(
-                        float(r["aux"][0]), trend, level,
-                        int(r["n_obs"]), steps)
-                else:
-                    # no-silent-drops rule: a foreign/corrupt family
-                    # string must fail loudly, not forecast nothing
-                    raise ValueError(
-                        f"unknown smoothing family {fam!r} in model "
-                        f"table (known: {_SMOOTH_FAMILIES})")
-                for h, v in enumerate(fc, start=1):
-                    rows.append(keys + [h, r["var"], float(v)])
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
+    def per_model(r):
+        fam = r["family"]
+        level, trend = float(r["level"]), float(r["trend"])
+        if fam == "holt":
+            fc = holt_forecast_from_state(level, trend, steps)
+        elif fam == "holt_damped":
+            fc = damped_forecast_from_state(
+                level, trend, float(r["phi"]), steps)
+        elif fam == "holt_winters":
+            fc = hw_forecast_from_state(
+                level, trend, [float(s) for s in r["season"]], steps)
+        elif fam == "theta":
+            fc = theta_forecast_from_state(
+                float(r["aux"][0]), trend, level, int(r["n_obs"]), steps)
+        else:
+            # no-silent-drops rule: a foreign/corrupt family string must
+            # fail loudly, not forecast nothing
+            raise ValueError(
+                f"unknown smoothing family {fam!r} in model "
+                f"table (known: {_SMOOTH_FAMILIES})")
+        return {"step": np.arange(1, len(fc) + 1),
+                "var": [r["var"]] * len(fc),
+                "forecast": np.asarray(fc, dtype=float)}
 
-    return models.mapInPandas(run, schema=schema)
+    return _run_units(models, groups, fields, per_model)
 
 
 __all__ += ["smoothing_model_table", "forecast_from_smoothing_table"]

@@ -2,11 +2,11 @@
 
 The reference fits one statsmodels model on one in-memory series
 (``models.py:152-190``).  At 100 TB the workload is *many* independent
-series (one per user / instrument / sensor), so the natural Spark plan is
-``groupBy(series).applyInPandas(fit_forecast)``: each series fits in one
-Arrow batch on one executor core, and a million series parallelize across
-the cluster with a single shuffle on the series key.  No driver-side loop,
-no collect.
+series (one per user / instrument / sensor).  Every fit here packs each
+series into one row of time-sorted arrays and fits many series per Arrow
+batch on the shared per-series runner (``spark_analytics._pack`` /
+``_run_units``): a million series parallelize across the cluster with a
+single shuffle on the series key.  No driver-side loop, no collect.
 
 ``forecast_by_series`` emits the reference's forecast-table naming
 contract (``models.py:210-228``) as rows ``(series..., step, var,
@@ -22,7 +22,6 @@ from __future__ import annotations
 from typing import Callable, Optional, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,10 +29,26 @@ from pyspark.sql import types as T
 from orange3_timeseries_spark.frame import TimeSeriesFrame
 from orange3_timeseries_spark.models.evaluation import model_evaluation
 from orange3_timeseries_spark.spark_analytics import (
-    _grouped,
-    _order_col,
-    _series_schema,
+    _columns,
+    _pack,
+    _packed_map,
+    _run_units,
 )
+
+#: the exceptions an infeasible fit raises (series too short for the
+#: order, singular Gram, degenerate residuals): that fit yields no rows.
+#: Anything else propagates — a genuine bug must fail the job, not
+#: silently drop series.
+_INFEASIBLE_FIT = (ValueError, np.linalg.LinAlgError, ZeroDivisionError,
+                  FloatingPointError)
+
+_FORECAST_FIELDS = [
+    T.StructField("step", T.IntegerType()),
+    T.StructField("var", T.StringType()),
+    T.StructField("forecast", T.DoubleType()),
+    T.StructField("ci_low", T.DoubleType()),
+    T.StructField("ci_high", T.DoubleType()),
+]
 
 
 def forecast_by_series(tsf: TimeSeriesFrame, cols: Sequence[str],
@@ -46,78 +61,35 @@ def forecast_by_series(tsf: TimeSeriesFrame, cols: Sequence[str],
     fit all ``cols`` jointly per series — decided via the model's
     ``SUPPORTS_VECTOR`` flag (cf. ``models.py:26``).
     """
-    order = _order_col(tsf)
     cols = list(cols)
-    df, groups, _ = _grouped(tsf, keep_cols=[order, *cols])
-    schema = _series_schema(groups, df, [
-        T.StructField("step", T.IntegerType()),
-        T.StructField("var", T.StringType()),
-        T.StructField("forecast", T.DoubleType()),
-        T.StructField("ci_low", T.DoubleType()),
-        T.StructField("ci_high", T.DoubleType()),
-    ])
     vector = bool(getattr(model_factory(), "SUPPORTS_VECTOR", False))
+    hs = np.arange(1, steps + 1)
 
-    # pack each series into sorted arrays (one grouped row per series),
-    # then fit MANY series per Arrow batch — per-group applyInPandas pays
-    # pandas/Arrow setup per SERIES, which dominates when series are
-    # small and numerous (measured ~5 ms/series vs sub-ms fits)
-    packed = _pack_series(df, groups, order, cols)
+    def per_series(r):
+        ys = {c: np.asarray(r[c], dtype=float) for c in cols}
+        fits = ([(cols, np.column_stack([ys[c] for c in cols]))] if vector
+                else [([c], ys[c]) for c in cols])
+        rows = []
+        for names, y in fits:
+            try:
+                model = model_factory().fit(y, var_names=names)
+                fc, lo, hi = model.predict(steps, alpha=alpha)
+            except _INFEASIBLE_FIT:
+                continue  # short / degenerate series yield no rows
+            rows += zip(np.repeat(hs, len(names)), names * steps,
+                        np.ravel(fc), np.ravel(lo), np.ravel(hi))
+        return _columns(_FORECAST_FIELDS, rows)
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                try:
-                    if vector:
-                        y = np.column_stack(
-                            [np.asarray(r[c], dtype=float) for c in cols])
-                        model = model_factory().fit(y, var_names=cols)
-                        fc, lo, hi = model.predict(steps, alpha=alpha)
-                        for h in range(steps):
-                            for j, name in enumerate(cols):
-                                rows.append(keys + [h + 1, name,
-                                                    float(fc[h, j]),
-                                                    float(lo[h, j]),
-                                                    float(hi[h, j])])
-                    else:
-                        for name in cols:
-                            y = np.asarray(r[name], dtype=float)
-                            model = model_factory().fit(y, var_names=[name])
-                            fc, lo, hi = model.predict(steps, alpha=alpha)
-                            fc, lo, hi = (np.ravel(a)
-                                          for a in (fc, lo, hi))
-                            for h in range(steps):
-                                rows.append(keys + [h + 1, name,
-                                                    float(fc[h]),
-                                                    float(lo[h]),
-                                                    float(hi[h])])
-                except Exception:
-                    pass  # short / degenerate series yield no rows
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
-
-    return packed.mapInPandas(run, schema=schema)
+    return _packed_map(tsf, cols, _FORECAST_FIELDS, per_series)
 
 
 def _pack_series(df, groups, order, cols):
-    """One row per series with each column as a time-sorted array; nulls
-    preserved as NaN (collect_list drops nulls, so values ride inside a
-    struct and are unpacked after the sort).  Parallelism is pinned with a
-    user repartition on the keys — see ``_pin_parallelism``: AQE would
-    otherwise coalesce the small packed shuffle to one partition and
-    serialize the per-series fits."""
-    from orange3_timeseries_spark.spark_analytics import _pin_parallelism
-    df = _pin_parallelism(df, groups)
-    aggs = [
-        F.transform(
-            F.array_sort(F.collect_list(
-                F.struct(F.col(order).alias("o"),
-                         F.col(c).cast("double").alias("v")))),
-            lambda s: s["v"]).alias(c)
-        for c in cols]
-    return df.groupBy(*groups).agg(*aggs)
+    """:func:`spark_analytics._pack` over a plain DataFrame keyed by
+    ``groups`` and ordered by ``order``; the packed DataFrame only.
+    Kept under this name for the benchmark's ``ar1_fitted_by_user`` op
+    (``perfbench/ops_ts.py``), which imports it."""
+    tsf = TimeSeriesFrame(df, time_col=order, series_cols=groups)
+    return _pack(tsf, cols)[0]
 
 
 def forecast_wide_table(tsf: TimeSeriesFrame, cols: Sequence[str],
@@ -176,10 +148,8 @@ def evaluate_by_series(tsf: TimeSeriesFrame, col: str,
     companions = ``extra_cols``); univariate models just ignore them
     via ``model_evaluation``'s column-0 convention.
     """
-    order = _order_col(tsf)
     all_cols = [col, *extra_cols]
-    df, groups, _ = _grouped(tsf, keep_cols=[order, *all_cols])
-    schema = _series_schema(groups, df, [
+    fields = [
         T.StructField("model", T.StringType()),
         T.StructField("in_sample", T.BooleanType()),
         T.StructField("rmse", T.DoubleType()),
@@ -189,38 +159,28 @@ def evaluate_by_series(tsf: TimeSeriesFrame, col: str,
         T.StructField("r2", T.DoubleType()),
         T.StructField("aic", T.DoubleType()),
         T.StructField("bic", T.DoubleType()),
-    ])
+    ]
 
-    packed = _pack_series(df, groups, order, all_cols)
+    def per_series(r):
+        y = np.asarray(r[col], dtype=float)
+        if extra_cols:
+            y = np.column_stack(
+                [y] + [np.asarray(r[c], dtype=float) for c in extra_cols])
+        try:
+            table = model_evaluation(
+                y, [f() for f in model_factories], n_folds, forecast_steps)
+        except _INFEASIBLE_FIT:
+            return None  # too short for the folds
+        rows = []
+        for row in table[1:]:
+            name = str(row[0])
+            vals = [float(v) if isinstance(v, (int, float, np.floating))
+                    else float("nan") for v in row[1:8]]
+            rows.append((name.replace(" (in-sample)", ""),
+                         name.endswith(" (in-sample)"), *vals))
+        return _columns(fields, rows)
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                y = np.asarray(r[col], dtype=float)
-                if extra_cols:
-                    y = np.column_stack(
-                        [y] + [np.asarray(r[c], dtype=float)
-                               for c in extra_cols])
-                try:
-                    table = model_evaluation(
-                        y, [f() for f in model_factories],
-                        n_folds, forecast_steps)
-                except Exception:
-                    table = []
-                for row in table[1:]:
-                    name = str(row[0])
-                    in_sample = name.endswith(" (in-sample)")
-                    vals = [float(v)
-                            if isinstance(v, (int, float, np.floating))
-                            else float("nan") for v in row[1:8]]
-                    rows.append(keys + [name.replace(" (in-sample)", ""),
-                                        in_sample] + vals)
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
-
-    return packed.mapInPandas(run, schema=schema)
+    return _packed_map(tsf, all_cols, fields, per_series)
 
 
 #: default IC grid: p x d x q over the small orders practitioners
@@ -257,53 +217,38 @@ def auto_arima_order_by_series(tsf: TimeSeriesFrame, col: str,
 
     if ic not in ("aic", "bic"):
         raise ValueError("ic must be 'aic' or 'bic'")
-    order_expr = _order_col(tsf)
-    df, groups, _ = _grouped(tsf, keep_cols=[order_expr, col])
-    packed = _pack_series(df, groups, order_expr, [col])
+    packed, groups = _pack(tsf, [col])
     grid = packed.withColumn(
         "__ord__",
         F.explode(F.array(*[
             F.struct(F.lit(int(p)).alias("p"), F.lit(int(d)).alias("d"),
                      F.lit(int(q)).alias("q"))
             for (p, d, q) in orders])))
-    schema = _series_schema(groups, df, [
+    fields = [
         T.StructField("p", T.IntegerType()),
         T.StructField("d", T.IntegerType()),
         T.StructField("q", T.IntegerType()),
         T.StructField("aic", T.DoubleType()),
         T.StructField("bic", T.DoubleType()),
-    ])
+    ]
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                keys = [r[g] for g in groups]
-                o = r["__ord__"]
-                p_, d_, q_ = int(o["p"]), int(o["d"]), int(o["q"])
-                y = np.asarray(r[col], dtype=float)
-                try:
-                    m = ARIMA((p_, d_, q_), quantize=quantize).fit(
-                        y, var_names=[col])
-                    res = m.results
-                    rows.append(keys + [p_, d_, q_, float(res.aic),
-                                        float(res.bic)])
-                except (ValueError, np.linalg.LinAlgError,
-                        ZeroDivisionError, FloatingPointError):
-                    # expected infeasible fits only (series too short
-                    # for the order, singular Gram / degenerate
-                    # residuals): that order drops from this series'
-                    # grid.  Anything else propagates — a genuine bug
-                    # must fail the job, not silently change the
-                    # selected winner.
-                    pass
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
+    def per_order(r):
+        o = r["__ord__"]
+        p_, d_, q_ = int(o["p"]), int(o["d"]), int(o["q"])
+        try:
+            res = ARIMA((p_, d_, q_), quantize=quantize).fit(
+                np.asarray(r[col], dtype=float), var_names=[col]).results
+        except _INFEASIBLE_FIT:
+            # that order drops from this series' grid; anything else
+            # propagates rather than silently change the selected winner
+            return None
+        return _columns(fields, [(p_, d_, q_, float(res.aic),
+                                  float(res.bic))])
 
-    scored = grid.mapInPandas(run, schema=schema)
+    scored = _run_units(grid, groups, fields, per_order)
     if keep_all:
         return scored
-    w = Window.partitionBy(*groups).orderBy(
+    w = Window.partitionBy(*tsf.series_cols).orderBy(
         F.round(F.col(ic), 6).asc(), F.col("p"), F.col("d"), F.col("q"))
     return (scored.withColumn("__rk__", F.row_number().over(w))
             .where(F.col("__rk__") == 1).drop("__rk__"))

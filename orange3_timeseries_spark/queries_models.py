@@ -2,9 +2,10 @@
 
 ``ar1_params_by_user`` has a full DuckDB value-hash oracle: fitting
 ARIMA(1,0,0) by conditional least squares IS the OLS regression of y_t on
-(1, y_{t-1}), so the engine's per-series fit (grouped ``applyInPandas``)
-is cross-checked against DuckDB's ``regr_slope`` / ``regr_intercept``,
-including the one-step-ahead forecast ``c + phi * y_n``.
+(1, y_{t-1}), so the engine's per-series fit (the packed-series runner,
+``spark_analytics._packed_map``) is cross-checked against DuckDB's
+``regr_slope`` / ``regr_intercept``, including the one-step-ahead
+forecast ``c + phi * y_n``.
 
 ``model_eval_by_user`` (rolling-origin CV) is likewise fully oracled: the
 per-fold AR(1) fits are closed-form OLS and the 5-step forecast recursion
@@ -16,7 +17,6 @@ oracles and golden-tested in tests/test_models.py.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,32 +52,21 @@ def q_ar1_params_by_user(spark, sf_dir):
     """Per-series ARIMA(1,0,0) conditional-LS fit + 1-step forecast;
     oracle = OLS regression aggregates in DuckDB (same normal equations)."""
     from orange3_timeseries_spark.models import ARIMA
+    from orange3_timeseries_spark.spark_analytics import _packed_map
 
-    from orange3_timeseries_spark.models.spark import _pack_series
+    fields = [T.StructField("const", T.DoubleType()),
+              T.StructField("phi", T.DoubleType()),
+              T.StructField("fc1", T.DoubleType())]
 
-    tsf = _events(spark, sf_dir)
-    schema = T.StructType([
-        tsf.df.schema["user_id"],
-        T.StructField("const", T.DoubleType()),
-        T.StructField("phi", T.DoubleType()),
-        T.StructField("fc1", T.DoubleType()),
-    ])
-    packed = _pack_series(tsf.df.select("user_id", "ts", "value"),
-                          ["user_id"], "ts", ["value"])
+    def per_series(r):
+        m = ARIMA((1, 0, 0)).fit(np.asarray(r["value"], dtype=float))
+        fc, _, _ = m.predict(1)
+        return {"const": [float(m.results.const)],
+                "phi": [float(m.results.phi[0])],
+                "fc1": [float(np.ravel(fc)[0])]}
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                m = ARIMA((1, 0, 0)).fit(np.asarray(r["value"], dtype=float))
-                fc, _, _ = m.predict(1)
-                rows.append([r["user_id"], float(m.results.const),
-                             float(m.results.phi[0]),
-                             float(np.ravel(fc)[0])])
-            yield pd.DataFrame(rows, columns=["user_id", "const", "phi",
-                                              "fc1"])
-
-    out = packed.mapInPandas(run, schema=schema)
+    out = _packed_map(_events(spark, sf_dir), ["value"], fields,
+                      per_series)
     return out.select("user_id", r6(F.col("const"), "const"),
                       r6(F.col("phi"), "phi"), r6(F.col("fc1"), "fc1"))
 
@@ -638,35 +627,23 @@ def q_ar1_fitted_by_user(spark, sf_dir):
     (``fittedvalues``/``residuals``, ``models.py:62-128``) — oracle
     recomputes them from the OLS normal equations row by row."""
     from orange3_timeseries_spark.models import ARIMA
-
-    from orange3_timeseries_spark.models.spark import _pack_series
+    from orange3_timeseries_spark.spark_analytics import _packed_map
 
     tsf = _events(spark, sf_dir)
-    schema = T.StructType([
-        tsf.df.schema["user_id"], tsf.df.schema["event_id"],
-        T.StructField("fitted", T.DoubleType()),
-        T.StructField("resid", T.DoubleType()),
-    ])
-    packed = _pack_series(
-        tsf.df.select("user_id", "ts", "value", "event_id"),
-        ["user_id"], "ts", ["value", "event_id"])
+    fields = [tsf.df.schema["event_id"],
+              T.StructField("fitted", T.DoubleType()),
+              T.StructField("resid", T.DoubleType())]
 
-    def run(batches):
-        for pdf in batches:
-            frames = []
-            for _, r in pdf.iterrows():
-                y = np.asarray(r["value"], dtype=float)
-                m = ARIMA((1, 0, 0)).fit(y)
-                frames.append(pd.DataFrame({
-                    "user_id": r["user_id"],
-                    "event_id": np.asarray(r["event_id"]).astype("int64"),
-                    "fitted": m.fittedvalues(),
-                    "resid": m.residuals()}))
-            yield pd.concat(frames, ignore_index=True) if frames \
-                else pd.DataFrame(columns=["user_id", "event_id",
-                                           "fitted", "resid"])
+    def per_series(r):
+        m = ARIMA((1, 0, 0)).fit(np.asarray(r["value"], dtype=float))
+        return {"event_id": np.asarray(r["event_id"], dtype="int64"),
+                "fitted": m.fittedvalues(),
+                "resid": m.residuals()}
 
-    out = packed.mapInPandas(run, schema=schema)
+    # event_id packed at its native type: a double round-trip corrupts
+    # ids above 2^53
+    out = _packed_map(tsf, ["value", "event_id"], fields, per_series,
+                      native_cols=("event_id",))
     return out.select("user_id", "event_id", r6(F.col("fitted"), "fitted"),
                       r6(F.col("resid"), "resid"))
 
@@ -1452,45 +1429,31 @@ def q_var_auto_lag_by_user(spark, sf_dir):
     eliminating the [[Z'Z, Z'Y],[Y'Z, Y'Y]] augmented Gram through the
     predictor pivots leaves the ML residual cross-product as the Schur
     complement, from which ln det and the AIC follow directly."""
-    import numpy as np
-    import pandas as pd
-
-    from orange3_timeseries_spark.models.spark import _pack_series
     from orange3_timeseries_spark.models.var import _fit_var
-    from pyspark.sql import Window, types as T
+    from orange3_timeseries_spark.spark_analytics import _columns, _packed_map
+    from pyspark.sql import Window
 
     d = read_table(spark, sf_dir, "events")
-    w12 = (__import__("pyspark.sql.window", fromlist=["Window"])
-           .Window.partitionBy("user_id").orderBy("ts")
-           .rowsBetween(-11, 0))
+    w12 = Window.partitionBy("user_id").orderBy("ts").rowsBetween(-11, 0)
     base = d.select(
         "user_id", "ts", F.col("value").cast("double").alias("y1"),
         F.round(F.avg(F.col("value").cast("double")).over(w12), 7)
         .alias("y2"))
-    packed = _pack_series(base, ["user_id"], "ts", ["y1", "y2"])
-    schema = T.StructType([
-        base.schema["user_id"],
-        T.StructField("k_ar", T.IntegerType()),
-        T.StructField("n_obs", T.LongType()),
-        T.StructField("aic", T.DoubleType())])
+    fields = [T.StructField("k_ar", T.IntegerType()),
+              T.StructField("n_obs", T.LongType()),
+              T.StructField("aic", T.DoubleType())]
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                y = np.column_stack([np.asarray(r["y1"], dtype=float),
-                                     np.asarray(r["y2"], dtype=float)])
-                n = y.shape[0]
-                for p in range(0, 4):
-                    if n - p <= p * 2 + 3:
-                        continue
-                    res = _fit_var(y, p, "c")
-                    rows.append((r["user_id"], p, n - p,
-                                 float(res.aic)))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              schema.fields])
+    def per_series(r):
+        y = np.column_stack([np.asarray(r["y1"], dtype=float),
+                             np.asarray(r["y2"], dtype=float)])
+        n = y.shape[0]
+        return _columns(fields, [(p, n - p, float(_fit_var(y, p, "c").aic))
+                                 for p in range(0, 4)
+                                 if n - p > p * 2 + 3])
 
-    scored = packed.mapInPandas(run, schema)
+    scored = _packed_map(
+        TimeSeriesFrame(base, time_col="ts", series_cols=["user_id"]),
+        ["y1", "y2"], fields, per_series)
     win = Window.partitionBy("user_id").orderBy(
         F.round(F.col("aic"), 4), F.col("k_ar"))
     return (scored.withColumn("__rk__", F.row_number().over(win))

@@ -1,13 +1,19 @@
 """Distributed wrappers for the analytics tier: each reference whole-column
-algorithm (SURVEY §2.7) runs as an Arrow-batched ``applyInPandas`` stage
-**per series**, so a million independent series parallelize across the
-cluster while each series computes with the exact NumPy semantics of the
-reference.  With no ``series_cols`` the frame degenerates to one group —
-the honest equivalent of the reference's single in-memory array.
+algorithm (SURVEY §2.7) runs **per series** with the exact NumPy
+semantics of the reference, so a million independent series parallelize
+across the cluster.  Every per-series Python stage — here, in the model
+tier and in the registered queries — shares one pack (:func:`_pack`: one
+row per series, each column a time-sorted array) and one batch runner
+(:func:`_run_units`: ``mapInPandas`` over one unit per row, many units
+per Arrow batch).  Only the row-preserving :func:`seasonal_decompose`
+keeps a grouped ``applyInPandas``.  With no ``series_cols`` the frame
+degenerates to one group — the honest equivalent of the reference's
+single in-memory array.
 """
 
 from __future__ import annotations
 
+from itertools import chain
 from typing import Optional, Sequence
 
 import numpy as np
@@ -34,12 +40,16 @@ from orange3_timeseries_spark.functions.spectral import (
     spectral_entropy,
 )
 
+#: group key :func:`_grouped` adds to a frame without series columns;
+#: dropped from every output
+_SYNTH_KEY = "__g__"
+
 
 def _grouped(tsf: TimeSeriesFrame, keep_cols=None):
     """(df_with_group, group_cols, added) — ensures at least one group key.
 
     ``keep_cols`` projects the frame down to exactly the columns the
-    pandas stage reads BEFORE the groupBy — applyInPandas ships whole
+    pandas stage reads BEFORE the groupBy — a Python stage ships whole
     rows, so without this the scan reads every column (column pruning
     can't see into the Python function)."""
     df = tsf.df
@@ -49,12 +59,7 @@ def _grouped(tsf: TimeSeriesFrame, keep_cols=None):
         df = df.select(*need)
     if tsf.series_cols:
         return df, list(tsf.series_cols), False
-    return df.withColumn("__g__", F.lit(1)), ["__g__"], True
-
-
-def _series_schema(group_cols, df, extra_fields):
-    fields = [df.schema[c] for c in group_cols]
-    return T.StructType(fields + extra_fields)
+    return df.withColumn(_SYNTH_KEY, F.lit(1)), [_SYNTH_KEY], True
 
 
 def _order_col(tsf: TimeSeriesFrame) -> str:
@@ -80,33 +85,27 @@ def _pin_parallelism(df: DataFrame, groups):
     combine, so pre-partitioning by the keys shuffles the identical bytes
     the groupBy would have.
     """
-    if groups == ["__g__"]:
+    if groups == [_SYNTH_KEY]:
         return df  # single logical series — nothing to parallelize over
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *groups)
 
 
-def _packed_map(tsf: TimeSeriesFrame, cols, extra_fields, per_series,
-                with_times: bool = False, native_cols=()):
-    """Shared fast path for per-series NumPy stages: pack each series into
-    time-sorted arrays (one grouped row per series), then run ``per_series``
-    over MANY series per Arrow batch with ``mapInPandas`` — per-group
-    ``applyInPandas`` pays pandas/Arrow setup per series, which dominates
-    when series are small and numerous (measured ~5 ms/series overhead vs
-    sub-ms NumPy work).
-
-    ``per_series`` receives a dict of the packed columns for one series
-    and returns a dict of equal-length arrays (or ``None``); outputs are
-    accumulated and emitted as ONE DataFrame per Arrow batch — building a
-    pandas DataFrame per series costs ~1-2 ms each, which dominated wall
-    time at thousands of small series.
+def _pack(tsf: TimeSeriesFrame, cols, with_times: bool = False,
+          native_cols=()):
+    """The one pack of every per-series Python stage: ``(packed,
+    groups)`` with one row per series holding each of ``cols`` as an
+    array sorted by the order column.  Values ride inside a struct
+    through the sort because collect_list drops nulls, so a null
+    observation stays a null slot (NaN once read as float).
 
     Columns named in ``native_cols`` are packed at their ORIGINAL Spark
     type instead of double — the double round-trip silently corrupts
-    integer ids above 2^53.
+    integer ids above 2^53.  ``with_times`` adds ``__t__``, the sorted
+    order column in epoch seconds.
     """
     order = _order_col(tsf)
-    df, groups, added = _grouped(tsf, keep_cols=[order, *cols])
+    df, groups, _ = _grouped(tsf, keep_cols=[order, *cols])
     df = _pin_parallelism(df, groups)
     aggs = [
         F.transform(
@@ -119,41 +118,103 @@ def _packed_map(tsf: TimeSeriesFrame, cols, extra_fields, per_series,
     if with_times:
         aggs.append(F.array_sort(F.collect_list(
             ts_seconds(df, order))).alias("__t__"))
-    packed = df.groupBy(*groups).agg(*aggs)
-    schema = _series_schema(groups, df, extra_fields)
-    names = [f.name for f in schema.fields]
+    return df.groupBy(*groups).agg(*aggs), groups
+
+
+def _run_units(units: DataFrame, groups, extra_fields, per_series):
+    """The one batch runner of every per-series Python stage:
+    ``mapInPandas`` over a DataFrame with one UNIT per row — a packed
+    series, a (series, order) or (series, pair) row, a saved model row.
+    Many units share one Arrow batch; per-group ``applyInPandas`` pays
+    pandas/Arrow setup per series, which dominates when series are small
+    and numerous (measured ~5 ms/series overhead vs sub-ms NumPy work).
+
+    ``per_series`` receives a dict of the unit's non-group columns and
+    returns a dict of equal-length output columns (or ``None`` / empty
+    to skip the unit).  The output carries ``groups`` (minus the
+    synthetic ``__g__`` key) followed by ``extra_fields``.
+    """
+    keys = [g for g in groups if g != _SYNTH_KEY]
+    schema = T.StructType([units.schema[g] for g in keys]
+                          + list(extra_fields))
+    return units.mapInPandas(_unit_batches(groups, schema, per_series),
+                             schema=schema)
+
+
+def _unit_batches(groups, schema, per_series):
+    """The Arrow-batch function :func:`_run_units` maps.  Outputs are
+    accumulated and emitted as ONE DataFrame per batch — a pandas
+    DataFrame per unit costs ~1-2 ms, which dominated wall time at
+    thousands of small series.  Array-typed output columns are chained
+    as lists (one list per row), never stacked into a 2-D array."""
+    names = schema.names
+    keys = [g for g in groups if g in names]
+    lists = {f.name for f in schema.fields
+             if isinstance(f.dataType, T.ArrayType)}
 
     def run(batches):
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(columns=names)
-                continue
-            gvals = {g: pdf[g].to_numpy() for g in groups}
             data = {c: pdf[c].to_list() for c in pdf.columns
                     if c not in groups}
             outs, counts, kept = [], [], []
             for i in range(len(pdf)):
                 out = per_series({c: v[i] for c, v in data.items()})
-                if not out:
-                    continue
-                n = len(next(iter(out.values())))
-                if not n:
-                    continue
-                outs.append(out)
-                counts.append(n)
-                kept.append(i)
+                n = len(next(iter(out.values()))) if out else 0
+                if n:
+                    outs.append(out)
+                    counts.append(n)
+                    kept.append(i)
             if not outs:
                 yield pd.DataFrame(columns=names)
                 continue
-            result = {k: np.concatenate([o[k] for o in outs])
+            result = {k: list(chain.from_iterable(o[k] for o in outs))
+                      if k in lists else np.concatenate([o[k] for o in outs])
                       for k in outs[0]}
-            kept = np.asarray(kept)
-            for g in groups:
-                result[g] = np.repeat(gvals[g][kept], counts)
+            for g in keys:
+                result[g] = np.repeat(pdf[g].to_numpy()[kept], counts)
             yield pd.DataFrame(result)[names]
 
-    out = packed.mapInPandas(run, schema=schema)
-    return out.drop("__g__") if added else out
+    return run
+
+
+def _columns(fields, rows):
+    """A unit's output rows (tuples in ``fields`` order) as the dict of
+    columns ``per_series`` returns; ``None`` when there are no rows."""
+    return dict(zip([f.name for f in fields], zip(*rows))) if rows else None
+
+
+def _packed_map(tsf: TimeSeriesFrame, cols, extra_fields, per_series,
+                with_times: bool = False, native_cols=()):
+    """Pack each series (:func:`_pack`), then run ``per_series`` over
+    the packed rows (:func:`_run_units`)."""
+    packed, groups = _pack(tsf, cols, with_times, native_cols)
+    return _run_units(packed, groups, extra_fields, per_series)
+
+
+def _fill_gaps(x) -> np.ndarray:
+    """Float copy of ``x`` with NaN gaps linearly interpolated over the
+    observation index — the reference's ``data.interp()``
+    (``functions.py:399, :462``); left as is with < 2 observed values."""
+    x = np.array(x, dtype=float)
+    isnan = np.isnan(x)
+    if isnan.any() and (~isnan).sum() >= 2:
+        idx = np.arange(len(x), dtype=float)
+        x[isnan] = np.interp(idx[isnan], idx[~isnan], x[~isnan])
+    return x
+
+
+def _decompose_filled(raw, model, period):
+    """(adj, seasonal, trend, residual) of one series: gaps filled first
+    (``functions.py:399``), source NaNs re-applied to every component
+    but the seasonal one (``:411-415``)."""
+    raw = np.asarray(raw, dtype=float)
+    isnan = np.isnan(raw)
+    adj, seas, trend, resid = seasonal_decompose_arrays(
+        _fill_gaps(raw), model=model, period=period)
+    adj[isnan] = np.nan
+    trend[isnan] = np.nan
+    resid[isnan] = np.nan
+    return adj, seas, trend, resid
 
 
 def acf_table(tsf: TimeSeriesFrame, col: str, nlags: Optional[int] = None,
@@ -333,26 +394,21 @@ def seasonal_decompose(tsf: TimeSeriesFrame, cols: Sequence[str],
     def compute(pdf):
         pdf = pdf.sort_values(order).reset_index(drop=True)
         for c in cols:
-            raw = pdf[c].to_numpy(dtype=float)
-            isnan = np.isnan(raw)
-            x = raw.copy()
-            if isnan.any() and (~isnan).sum() >= 2:
-                idx = np.arange(len(x), dtype=float)
-                x[isnan] = np.interp(idx[isnan], idx[~isnan], x[~isnan])
-            adj, seas, trend, resid = seasonal_decompose_arrays(
-                x, model=model, period=period)
-            adj[isnan] = np.nan
-            trend[isnan] = np.nan
-            resid[isnan] = np.nan
-            pdf[f"{c} (season. adj.)"] = adj
-            pdf[f"{c} (seasonal)"] = seas
-            pdf[f"{c} (trend)"] = trend
-            pdf[f"{c} (residual)"] = resid
+            parts = _decompose_filled(pdf[c].to_numpy(dtype=float),
+                                      model, period)
+            for s, v in zip(suffixes, parts):
+                pdf[f"{c} ({s})"] = v
         return pdf
 
     out = df.groupBy(*groups).applyInPandas(compute, schema=schema)
-    out = out.drop("__g__") if added else out
+    out = out.drop(_SYNTH_KEY) if added else out
     return tsf._with_df(out)
+
+
+_GRANGER_FIELDS = [T.StructField("lag", T.IntegerType()),
+                   T.StructField("p", T.DoubleType()),
+                   T.StructField("antecedent", T.StringType()),
+                   T.StructField("consequent", T.StringType())]
 
 
 def granger_causality(tsf: TimeSeriesFrame, cols: Sequence[str],
@@ -360,38 +416,38 @@ def granger_causality(tsf: TimeSeriesFrame, cols: Sequence[str],
     """Per-series Granger tests over all ordered pairs of ``cols``
     (series..., lag, p, antecedent, consequent) — ``functions.py:433-492``.
     Gaps linearly interpolated first (``:462``)."""
-    order = _order_col(tsf)
-    df, groups, added = _grouped(tsf, keep_cols=[order, *cols])
-    df = _pin_parallelism(df, groups)
-    schema = _series_schema(groups, df, [
-        T.StructField("lag", T.IntegerType()),
-        T.StructField("p", T.DoubleType()),
-        T.StructField("antecedent", T.StringType()),
-        T.StructField("consequent", T.StringType())])
+    cols = list(cols)
 
-    def compute(keys, pdf):
-        pdf = pdf.sort_values(order)
-        arrays = []
-        for c in cols:
-            x = pdf[c].to_numpy(dtype=float)
-            isnan = np.isnan(x)
-            if isnan.any() and (~isnan).sum() >= 2:
-                idx = np.arange(len(x), dtype=float)
-                x[isnan] = np.interp(idx[isnan], idx[~isnan], x[~isnan])
-            arrays.append(x)
-        rows = granger_causality_arrays(arrays, list(cols), max_lag, alpha)
-        out = pd.DataFrame(rows, columns=["lag", "p", "antecedent",
-                                          "consequent"])
-        if not len(rows):
-            out = pd.DataFrame(columns=["lag", "p", "antecedent",
-                                        "consequent"])
-        out["lag"] = out["lag"].astype("int32", errors="ignore")
-        for k, v in zip(groups, keys):
-            out[k] = v
-        return out[[f.name for f in schema.fields]]
+    def per_series(r):
+        rows = granger_causality_arrays([_fill_gaps(r[c]) for c in cols],
+                                        cols, max_lag, alpha)
+        if not rows:
+            return None
+        lag, p, ante, cons = zip(*rows)
+        return {"lag": np.array(lag, dtype="int32"),
+                "p": np.array(p, dtype=float),
+                "antecedent": list(ante), "consequent": list(cons)}
 
-    out = df.groupBy(*groups).applyInPandas(compute, schema=schema)
-    return out.drop("__g__") if added else out
+    return _packed_map(tsf, cols, _GRANGER_FIELDS, per_series)
+
+
+def _pair_units(tsf: TimeSeriesFrame, cols):
+    """(units, groups): every packed series crossed with the broadcast
+    list of ordered (antecedent, consequent) pairs, one pair per row and
+    one task per pair, so a wide variable set parallelizes even for a
+    single series."""
+    from orange3_timeseries_spark.operators.localrel import local_df
+
+    packed, groups = _pack(tsf, cols)
+    # JVM LocalRelation, not a Python-RDD-backed table: the broadcast
+    # build otherwise re-runs a Python worker job per action
+    # (operators/localrel.py)
+    pairs = local_df(
+        packed.sparkSession, [(a, c) for a in cols for c in cols if a != c],
+        "antecedent string, consequent string")
+    units = packed.crossJoin(F.broadcast(pairs)) \
+        .repartition(len(cols) * (len(cols) - 1))
+    return units, groups
 
 
 def granger_causality_pairs(tsf: TimeSeriesFrame, cols: Sequence[str],
@@ -404,64 +460,26 @@ def granger_causality_pairs(tsf: TimeSeriesFrame, cols: Sequence[str],
     series count, this one's is pair count).
 
     Plan: pack each series' columns into sorted arrays (one grouped row
-    per series), cross-join with the broadcast pair list, then a row-wise
-    ``mapInPandas`` runs the F-test per (series, pair) row.  No driver
-    collect; the packed row rides the shuffle once.
+    per series), cross-join with the broadcast pair list, then the batch
+    runner runs the F-test per (series, pair) row.  No driver collect;
+    the packed row rides the shuffle once.
     """
     from orange3_timeseries_spark.functions.granger import (
         first_significant_lag,
     )
 
-    def _interp(x):
-        isnan = np.isnan(x)
-        if isnan.any() and (~isnan).sum() >= 2:
-            idx = np.arange(len(x), dtype=float)
-            x[isnan] = np.interp(idx[isnan], idx[~isnan], x[~isnan])
-        return x
+    def per_pair(r):
+        a, c = r["antecedent"], r["consequent"]
+        lag, p = first_significant_lag(_fill_gaps(r[a]), _fill_gaps(r[c]),
+                                       max_lag, alpha)
+        if not lag:
+            return None
+        return {"lag": np.array([lag], dtype="int32"),
+                "p": np.array([p], dtype=float),
+                "antecedent": [a], "consequent": [c]}
 
-    order = _order_col(tsf)
-    df, groups, added = _grouped(tsf, keep_cols=[order, *cols])
-    df = _pin_parallelism(df, groups)
-    packed = df.groupBy(*groups).agg(*[
-        F.transform(
-            F.array_sort(F.collect_list(
-                F.struct(F.col(order).alias("o"),
-                         F.col(c).cast("double").alias("v")))),
-            lambda s: s["v"]).alias(c)
-        for c in cols])
-    spark = df.sparkSession
-    # JVM LocalRelation, not a Python-RDD-backed table: the broadcast
-    # build otherwise re-runs a Python worker job per action
-    # (operators/localrel.py)
-    from orange3_timeseries_spark.operators.localrel import local_df
-    pairs = local_df(
-        spark, [(a, c) for a in cols for c in cols if a != c],
-        "antecedent string, consequent string")
-    crossed = packed.crossJoin(F.broadcast(pairs)) \
-        .repartition(len(cols) * (len(cols) - 1))
-    schema = _series_schema(groups, df, [
-        T.StructField("lag", T.IntegerType()),
-        T.StructField("p", T.DoubleType()),
-        T.StructField("antecedent", T.StringType()),
-        T.StructField("consequent", T.StringType())])
-
-    def compute(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                a = _interp(np.asarray(r[r["antecedent"]], dtype=float))
-                c = _interp(np.asarray(r[r["consequent"]], dtype=float))
-                lag, p = first_significant_lag(a, c, max_lag, alpha)
-                if lag:
-                    rows.append([r[g] for g in groups]
-                                + [lag, p, r["antecedent"], r["consequent"]])
-            out = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-            if rows:
-                out["lag"] = out["lag"].astype("int32")
-            yield out
-
-    out = crossed.mapInPandas(compute, schema=schema)
-    return out.drop("__g__") if added else out
+    units, groups = _pair_units(tsf, list(cols))
+    return _run_units(units, groups, _GRANGER_FIELDS, per_pair)
 
 
 def granger_f_table(tsf: TimeSeriesFrame, cols: Sequence[str],
@@ -476,58 +494,27 @@ def granger_f_table(tsf: TimeSeriesFrame, cols: Sequence[str],
     :func:`granger_causality_pairs`."""
     from orange3_timeseries_spark.functions.granger import granger_f_test
 
-    def _interp(x):
-        isnan = np.isnan(x)
-        if isnan.any() and (~isnan).sum() >= 2:
-            idx = np.arange(len(x), dtype=float)
-            x[isnan] = np.interp(idx[isnan], idx[~isnan], x[~isnan])
-        return x
+    fields = [T.StructField("antecedent", T.StringType()),
+              T.StructField("consequent", T.StringType()),
+              T.StructField("fstat", T.DoubleType()),
+              T.StructField("p", T.DoubleType())]
 
-    order = _order_col(tsf)
-    df, groups, added = _grouped(tsf, keep_cols=[order, *cols])
-    df = _pin_parallelism(df, groups)
-    packed = df.groupBy(*groups).agg(*[
-        F.transform(
-            F.array_sort(F.collect_list(
-                F.struct(F.col(order).alias("o"),
-                         F.col(c).cast("double").alias("v")))),
-            lambda s: s["v"]).alias(c)
-        for c in cols])
-    spark = df.sparkSession
-    # JVM LocalRelation, not a Python-RDD-backed table (localrel.py)
-    from orange3_timeseries_spark.operators.localrel import local_df
-    pairs = local_df(
-        spark, [(a, c) for a in cols for c in cols if a != c],
-        "antecedent string, consequent string")
-    crossed = packed.crossJoin(F.broadcast(pairs)) \
-        .repartition(len(cols) * (len(cols) - 1))
-    schema = _series_schema(groups, df, [
-        T.StructField("antecedent", T.StringType()),
-        T.StructField("consequent", T.StringType()),
-        T.StructField("fstat", T.DoubleType()),
-        T.StructField("p", T.DoubleType())])
+    def per_pair(r):
+        a, c = r["antecedent"], r["consequent"]
+        fstat, p = granger_f_test(_fill_gaps(r[a]), _fill_gaps(r[c]), lag)
+        return {"antecedent": [a], "consequent": [c],
+                "fstat": np.array([float(fstat)]),
+                "p": np.array([float(p)])}
 
-    def compute(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                a = _interp(np.asarray(r[r["antecedent"]], dtype=float))
-                c = _interp(np.asarray(r[r["consequent"]], dtype=float))
-                fstat, p = granger_f_test(a, c, lag)
-                rows.append([r[g] for g in groups]
-                            + [r["antecedent"], r["consequent"],
-                               float(fstat), float(p)])
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    out = crossed.mapInPandas(compute, schema=schema)
-    return out.drop("__g__") if added else out
+    units, groups = _pair_units(tsf, list(cols))
+    return _run_units(units, groups, fields, per_pair)
 
 
 def seasonal_components_table(tsf: TimeSeriesFrame, col: str,
                               id_col: str, model: str = "multiplicative",
                               period: int = 12) -> DataFrame:
     """Long-form decomposition (series..., id, adj, seasonal, trend,
-    residual) on the pack-series fast path — same semantics as
+    residual) on the packed-series runner — same semantics as
     :func:`seasonal_decompose` (interp first, NaN re-applied) but rows
     carry only the id + components, so many small series skip the
     per-group applyInPandas overhead."""
@@ -540,22 +527,11 @@ def seasonal_components_table(tsf: TimeSeriesFrame, col: str,
     ]
 
     def per_series(r):
-        raw = np.asarray(r[col], dtype=float)
+        adj, seas, trend, resid = _decompose_filled(r[col], model, period)
         # id packed at its NATIVE long type (native_cols below): a double
         # round-trip would silently corrupt ids above 2^53
-        ids = np.asarray(r[id_col], dtype="int64")
-        isnan = np.isnan(raw)
-        x = raw.copy()
-        if isnan.any() and (~isnan).sum() >= 2:
-            idx = np.arange(len(x), dtype=float)
-            x[isnan] = np.interp(idx[isnan], idx[~isnan], x[~isnan])
-        adj, seas, trend, resid = seasonal_decompose_arrays(
-            x, model=model, period=period)
-        adj[isnan] = np.nan
-        trend[isnan] = np.nan
-        resid[isnan] = np.nan
-        return {id_col: ids, "adj": adj, "seasonal": seas,
-                "trend": trend, "residual": resid}
+        return {id_col: np.asarray(r[id_col], dtype="int64"), "adj": adj,
+                "seasonal": seas, "trend": trend, "residual": resid}
 
     return _packed_map(tsf, [col, id_col], fields, per_series,
                        native_cols=(id_col,))
@@ -747,7 +723,7 @@ def baseline_forecast_table(tsf: TimeSeriesFrame, col: str, m: int = 7,
               .select(*groups, F.lit("snaive").alias("method"), "step",
                       F.col("__sv__").alias("forecast")))
     out = naive.unionByName(snaive).unionByName(drift)
-    return out.drop("__g__") if added else out
+    return out.drop(_SYNTH_KEY) if added else out
 
 
 #: default Holt smoothing-weight grid for the parameter search
